@@ -280,7 +280,6 @@ def _per_stage_increment(spark, c_job: float, passes: int = 5) -> float:
     AQE) timed min-of-``passes``; the increment is
     (wall - n_jobs*c_job) / (n_stages - n_jobs), floored at 0. The
     probe rows are 1000 longs — data cost is nil at any host speed."""
-    tracker = spark.sparkContext.statusTracker()
     best = float("inf")
     jobs = stages = 0
     for i in range(passes):
@@ -293,12 +292,61 @@ def _per_stage_increment(spark, c_job: float, passes: int = 5) -> float:
         wall = time.perf_counter() - t0
         if wall < best:
             best = wall
-            job_ids = tracker.getJobIdsForGroup(grp)
-            infos = [tracker.getJobInfo(j) for j in job_ids]
-            jobs = len(job_ids)
-            stages = sum(len(x.stageIds) for x in infos if x is not None)
+            jobs, stages = _group_counts(spark, grp)
     extra = max(stages - jobs, 1)
     return round(max(best - jobs * c_job, 0.0) / extra, 4)
+
+
+def _group_counts(spark, grp: str) -> tuple[int, int]:
+    """(jobs, stages) that ran under job group ``grp``. AQE stages land
+    as separate jobs, so the job count is a slot's true scheduling
+    count. Each job info is bound once: an info expiring between a
+    guard and ``.stageIds`` would raise on None (round-12 ADVICE)."""
+    tracker = spark.sparkContext.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(grp)
+    infos = [tracker.getJobInfo(j) for j in job_ids]
+    return len(job_ids), sum(len(i.stageIds) for i in infos if i is not None)
+
+
+def _time_slot(
+    spark, reg, sf_dir, name, *, passes, warmup, run_id, tier, capture=None
+):
+    """Time one slot as a noop-sink power run; returns (min wall, jobs,
+    stages, adjacent per-job constant, ``capture()``).
+
+    An optional untimed warm-up pass, then the ADJACENT per-job
+    constant (between warm-up and timed passes, so it sees the host
+    state the slot's wall does; 3 noop passes ~ tens of ms, outside the
+    timed window), then ``passes`` timed passes, min reported.
+    clearCache after every pass so persist() reuse never crosses a
+    timing. Each timed pass runs under its own job group, so the job
+    and stage counts (and ``capture()``, e.g. the mart's phase walls)
+    come from the SAME pass whose wall is reported: a slot's fixed cost
+    is n_jobs x the per-job constant (round-10 verdict #6), and the
+    stage count is recorded as data next to the netted ratio (round-12
+    backlog #4 — the per-JOB constant understates a stage's cost)."""
+    fn = DIRECT.get(name) or reg.queries[name]
+    sc = spark.sparkContext
+    if warmup:
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
+    job_constant = _per_job_constant(spark, passes=3)
+    best = float("inf")
+    jobs = stages = 0
+    captured = None
+    for i in range(passes):
+        grp = f"bench_{tier}_{name}_{run_id}_{i}"
+        sc.setJobGroup(grp, name)
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        wall = time.perf_counter() - t0
+        if wall < best:
+            best = wall
+            jobs, stages = _group_counts(spark, grp)
+            captured = capture() if capture else None
+        sc.setJobGroup(f"bench_{tier}_idle_{run_id}", "between passes")
+        spark.catalog.clearCache()
+    return round(best, 3), jobs, stages, job_constant, captured
 
 
 def _duckdb_calibration(
@@ -397,36 +445,23 @@ def main() -> None:
     # times on a busy host carry ±15% scheduler/GC noise, and the min of
     # three is the standard power-run estimator of steady-state cost
     # (round-9 verdict #4: the idle-pair ratio band was 0.46-0.74 under
-    # min-of-2; a third pass per engine halves the spread).
-    # clearCache between runs so persist() reuse never crosses a timing.
+    # min-of-2; a third pass per engine halves the spread). No per-slot
+    # warm-up: the two passes above warmed every headline slot.
+    # Same per-slot bookkeeping as the extended tier (round 12): the
+    # adjacent per-job constant plus the job count of the min-wall pass,
+    # so the headline tier's fixed-cost story ("sub-second relational
+    # slots pay Spark's scheduling floor") is mechanical per slot
+    # instead of prose — headline_ratios_netted in BENCH_DETAILS.
     timings: dict[str, float] = {}
-    # same per-slot bookkeeping as the extended tier (round 12): an
-    # ADJACENT per-job constant sampled next to each slot's timed
-    # passes plus the job count of the min-wall pass, so the headline
-    # tier's fixed-cost story ("sub-second relational slots pay
-    # Spark's scheduling floor") is mechanical per slot instead of
-    # prose — headline_ratios_netted in BENCH_DETAILS.
     hl_jobs: dict[str, int] = {}
     hl_slot_constant: dict[str, float] = {}
-    hl_tracker = spark.sparkContext.statusTracker()
     for name in HEADLINE:
-        fn = DIRECT.get(name) or reg.queries[name]
-        hl_slot_constant[name] = _per_job_constant(spark, passes=3)
-        best = float("inf")
-        for i in range(3):
-            grp = f"bench_hl_{name}_{run_id}_{i}"
-            spark.sparkContext.setJobGroup(grp, name)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            if wall < best:
-                best = wall
-                hl_jobs[name] = len(hl_tracker.getJobIdsForGroup(grp))
-            spark.sparkContext.setJobGroup(
-                f"bench_hl_idle_{run_id}", "between passes"
+        timings[name], hl_jobs[name], _, hl_slot_constant[name], _ = (
+            _time_slot(
+                spark, reg, sf_dir, name,
+                passes=3, warmup=False, run_id=run_id, tier="hl",
             )
-            spark.catalog.clearCache()
-        timings[name] = round(best, 3)
+        )
 
     total = round(sum(timings.values()), 3)
 
@@ -492,53 +527,18 @@ def main() -> None:
     ext_stages: dict[str, int] = {}
     ext_slot_constant: dict[str, float] = {}
     mart_phases: dict[str, float] = {}
-    tracker = spark.sparkContext.statusTracker()
     for name in EXTENDED:
-        fn = reg.queries[name]
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        # adjacent constant: sampled between this slot's warmup and its
-        # timed passes, so it sees the same host state the slot's wall
-        # does (3 noop passes ~ tens of ms — negligible next to any
-        # slot, and it does not ride inside the timed window)
-        ext_slot_constant[name] = _per_job_constant(spark, passes=3)
-        best = float("inf")
-        for i in range(2):
-            # job-group EACH timed pass to COUNT the slot's Spark jobs
-            # (AQE stages land as separate jobs): the structural input
-            # to the constant-netted ratios below — a slot's fixed cost
-            # is n_jobs x the per-job constant, not one constant
-            # (round-10 verdict #6). The job count (and the mart phase
-            # dict) is taken from the pass whose wall is the reported
-            # min, never mixed across passes.
-            grp = f"bench_ext_{name}_{run_id}_{i}"
-            spark.sparkContext.setJobGroup(grp, name)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            if wall < best:
-                best = wall
-                job_ids = tracker.getJobIdsForGroup(grp)
-                ext_jobs[name] = len(job_ids)
-                # stage count of the SAME pass (round-12 backlog #4):
-                # the per-JOB noop constant understates a real stage's
-                # fixed cost (~0.15-0.3 s wall on this host), so the
-                # stage count is recorded as DATA next to the netted
-                # ratio — the SF-flatness records carry the argument,
-                # this makes it inspectable per slot.
-                # bind each job info once (round-12 ADVICE): an info
-                # expiring between the guard and .stageIds raises on None
-                _infos = [tracker.getJobInfo(j) for j in job_ids]
-                ext_stages[name] = sum(
-                    len(i.stageIds) for i in _infos if i is not None
-                )
-                if name == "incremental_mart_maintenance":
-                    mart_phases = dict(MART_PHASE_WALLS)
-            spark.sparkContext.setJobGroup(
-                f"bench_idle_{run_id}", "between slots"
-            )
-            spark.catalog.clearCache()
-        extended[name] = round(best, 3)
+        is_mart = name == "incremental_mart_maintenance"
+        (
+            extended[name], ext_jobs[name], ext_stages[name],
+            ext_slot_constant[name], phases,
+        ) = _time_slot(
+            spark, reg, sf_dir, name,
+            passes=2, warmup=True, run_id=run_id, tier="ext",
+            capture=(lambda: dict(MART_PHASE_WALLS)) if is_mart else None,
+        )
+        if is_mart:
+            mart_phases = phases
 
     # per-family wall breakdown for the quality report (round-11
     # verdict #3 — the same exoneration the mart's phases provide):

@@ -396,35 +396,6 @@ def sql_simhash64_int(text_expr: str = "text") -> str:
     return "(" + " + ".join(parts) + ")"
 
 
-def sql_simhash_int(n_bits: int = 32, text_expr: str = "text") -> str:
-    """DuckDB twin of :func:`simhash_int_from_hashes` (from text)."""
-    toks = f"string_split_regex({text_expr}, '\\s+')"
-    parts = []
-    for i in range(n_bits):
-        vote = (
-            f"list_sum(list_transform({toks}, t -> CASE WHEN "
-            f"substr(md5(t), {i + 1}, 1) >= '8' THEN 1 ELSE -1 END))"
-        )
-        parts.append(
-            f"CASE WHEN {vote} > 0 THEN CAST({1 << (n_bits - 1 - i)} AS BIGINT)"
-            f" ELSE 0 END"
-        )
-    return "(" + " + ".join(parts) + ")"
-
-
-def sql_simhash_bits(n_bits: int = 32, text_expr: str = "text") -> str:
-    """DuckDB twin of :func:`simhash_bits` (for oracle strings)."""
-    toks = f"string_split_regex({text_expr}, '\\s+')"
-    parts = []
-    for i in range(n_bits):
-        vote = (
-            f"list_sum(list_transform({toks}, t -> CASE WHEN "
-            f"substr(md5(t), {i + 1}, 1) >= '8' THEN 1 ELSE -1 END))"
-        )
-        parts.append(f"CASE WHEN {vote} > 0 THEN '1' ELSE '0' END")
-    return " || ".join(parts)
-
-
 def hamming_expr(col_a: str, col_b: str, n_bits: int = 32) -> Column:
     """Hamming distance between two equal-length bitstring columns."""
     return F.expr(

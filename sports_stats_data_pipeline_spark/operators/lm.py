@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "CharLM",
     "train_char_lm",
-    "train_char_lm_compact",
     "score_perplexity",
     "char_ngrams",
 ]
@@ -100,55 +99,6 @@ def train_char_lm(
     return CharLM(
         grams=grams,
         contexts=contexts,
-        vocab_size=max(1, vocab),
-        n=n,
-        add_k=add_k,
-    )
-
-
-def train_char_lm_compact(
-    spark, corpus: DataFrame, text_col: str, n: int = 3, add_k: float = 1.0
-) -> CharLM:
-    """One-job training: collect the gram-count table and derive the
-    context counts + vocab size locally, returning a CharLM whose model
-    tables are local relations.
-
-    The collect is bounded by the n-gram VOCABULARY (≤ |alphabet|^n —
-    ~100k rows for ASCII trigrams), not corpus size — the same
-    driver-boundedness argument as the Misra-Gries summaries in
-    operators/heavyhitters.py, valid unchanged at 100 TB.
-
-    vs :func:`train_char_lm`: one Spark job instead of one count action
-    plus two broadcast exchanges that each re-run the corpus aggregate
-    (the persist in the eager variant only helps while the cache
-    survives; a composite plan re-built per run pays all three). Scoring
-    then broadcasts LocalRelations — zero corpus re-scans. Use this when
-    the model feeds a single composite plan (plans/corpus.py); the eager
-    variant remains right when the model tables should stay distributed
-    artifacts (write-out + reload, streaming/quality.py).
-    """
-    # Arrow both ways (toPandas / createDataFrame-from-pandas): a
-    # ~100k-row model table moves as a couple of Arrow batches instead
-    # of 100k py4j-pickled rows.
-    pdf = (
-        char_ngrams(corpus.select(text_col), text_col, n)
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .toPandas()  # vocabulary-bounded, not corpus-bounded (docstring)
-    )
-    ctx_pdf = (
-        pdf.assign(ctx=pdf["gram"].str[: n - 1])
-        .groupby("ctx", as_index=False)["cnt"]
-        .sum()
-        .rename(columns={"cnt": "ctx_cnt"})
-        .sort_values("ctx", ignore_index=True)
-    )
-    vocab = int(pdf["gram"].str[n - 1 :].nunique())
-    grams_df = spark.createDataFrame(pdf, "gram string, cnt long")
-    contexts_df = spark.createDataFrame(ctx_pdf, "ctx string, ctx_cnt long")
-    return CharLM(
-        grams=grams_df,
-        contexts=contexts_df,
         vocab_size=max(1, vocab),
         n=n,
         add_k=add_k,

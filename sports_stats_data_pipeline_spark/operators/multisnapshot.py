@@ -1,15 +1,14 @@
 """Atomic multi-table snapshots: ONE commit covering N tables.
 
-operators/snapshots.py gives a single table versioned, manifest-
-published time travel. But the unit of consistency in a training-data
-pipeline is usually a GROUP of tables: documents + their embeddings +
-the ANN index built from them, or a mart + its dimension. Publishing
+Versioned, manifest-published time travel for ONE table is not
+enough: the unit of consistency in a training-data pipeline is usually
+a GROUP of tables: documents + their embeddings + the ANN index built
+from them, or a mart + its dimension. Publishing
 them with N independent commits leaves windows where a reader sees
 documents@v7 joined to embeddings@v6 — the cross-table skew that
 poisons a training run silently.
 
-This module is the snapshots idea with the manifest widened to a
-table GROUP:
+This module widens the snapshot manifest to a table GROUP:
 
     <root>/
       <table>/data/v<k>/part-*.parquet   per-table immutable data
@@ -22,10 +21,9 @@ of the whole group or none of it (the Iceberg/Delta multi-table
 transaction question, answered the same way both answer single-table:
 the manifest IS the transaction log entry).
 
-Same contracts as snapshots.py: manifest file lists (no directory
-LISTs — object-store-safe), paths stored relative to the root,
-single-writer (concurrent committers race the version and the loser
-raises), vacuum removes unreferenced data dirs including orphans from
+Contracts: manifest file lists (no directory LISTs —
+object-store-safe), paths stored relative to the root, single-writer
+(concurrent committers race the version and the loser raises), vacuum removes unreferenced data dirs including orphans from
 pre-publish crashes. ``mode='append'`` appends per table — a table
 absent from the batch carries forward unchanged, so an O(Δ)
 incremental publish touches only the tables that changed.

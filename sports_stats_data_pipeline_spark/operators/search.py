@@ -120,8 +120,8 @@ def bm25_topk(
     # sized) tf relation. The dl column must NOT ride the explode as a
     # size()-of-tokens projection sibling: a non-attribute sibling of a
     # Generate is re-evaluated per exploded row, re-tokenizing the
-    # document once per token — O(len²) per doc (the trap found in
-    # operators/decontam.py at corpus scale).
+    # document once per token — O(len²) per doc (found at corpus scale
+    # in a shingle explode: 546 s vs 8 s on a 5000-doc corpus).
     tf = (
         docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
         .filter(F.col("term").isin(qt))

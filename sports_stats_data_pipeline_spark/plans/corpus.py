@@ -3,11 +3,11 @@ steps downstream of dedup: quality filtering (perplexity + repetition +
 benchmark decontamination) and dataset layout (splits + source mixing +
 token-budget shard packing).
 
-These drive the operators from ``operators.lm``, ``operators.repetition``,
-``operators.decontam``, ``operators.sampling`` and ``operators.sharding``
-end-to-end over the ``documents`` table with full DuckDB oracles (each
-operator's twin is additionally pinned in its own pytest module:
-tests/test_lm.py, test_repetition.py, test_decontam.py, test_sampling.py,
+Both run end-to-end over the ``documents`` table with full DuckDB
+oracles. The quality filter is one fused body (its docstring) whose LM
+math is pinned against ``operators.lm`` (tests/test_lm.py); the layout
+query drives ``operators.sampling`` and ``operators.sharding``, each
+twin-pinned in its own pytest module (test_sampling.py,
 test_sharding.py).
 
 Determinism: every filter decision is integer arithmetic; the only
@@ -17,14 +17,13 @@ rounding boundary makes a cross-engine flip astronomically unlikely,
 and both engines round the same 6-decimal intermediate).
 
 Scale notes:
-- LM training shuffles n-gram *vocabulary* counts (bounded by alphabet³),
-  never corpus bytes; scoring is two broadcast joins over one exploded
-  scan (operators/lm.py docstring).
-- Repetition stats are two map-side-combinable aggregates bounded by
-  distinct (doc, gram) pairs (operators/repetition.py).
+- LM training collects n-gram *vocabulary* counts (bounded by
+  alphabet³), never corpus bytes; scoring is broadcast joins over one
+  exploded scan.
+- The repetition statistic is a per-row array expression — no
+  (doc, gram) shuffle.
 - Decontamination broadcasts the (small) benchmark shingle index — the
-  corpus is scanned once and never shuffled except the per-doc aggregate
-  (operators/decontam.py).
+  corpus is never shuffled except the per-doc aggregate.
 - Split/mix are pure per-row hash projections (no shuffle, no rand());
   shard packing is the two-level distributed prefix sum — no global
   ordered window (operators/sampling.py, operators/sharding.py).
@@ -66,11 +65,11 @@ def _top_bigram(toks):
     expression: sort the bigram array, one run-length scan via
     ``F.aggregate`` — O(n log n) per row inside whole-stage codegen, no
     explode, no shuffle. Fallback for <2 tokens: the whole token
-    sequence as a single gram (count 1), mirroring
-    operators/repetition.top_ngram_stats.
+    sequence as a single gram (count 1), mirroring the oracle's
+    ``ELSE [array_to_string(toks, ' ')]`` branch.
 
-    Theorem (tie-break equivalence, property-pinned against
-    top_ngram_stats in tests/test_corpus_plans.py): array_sort orders
+    Theorem (tie-break equivalence, property-pinned against the oracle's
+    two-level aggregate in tests/test_corpus_plans.py): array_sort orders
     by UTF8String binary comparison — the same ordering
     ``max(struct(cnt, gram))`` and the oracle's ``ORDER BY cnt DESC,
     gram DESC`` use — and the scan replaces the best run only when
@@ -281,22 +280,21 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     - The Gopher top-bigram is a pure array expression (sort + one
       run-length scan via F.aggregate) riding the synthetic per-doc
       'len' row — no (doc, gram) shuffle, no per-doc join-back (the
-      two-level aggregate shape the standalone operator uses costs two
-      exchange stages plus a join here).
+      oracle's two-level aggregate shape costs two exchange stages plus
+      a join here).
     - The char-trigram stream explodes PLAIN strings and unions the
       constant ``fam`` column in afterwards; per-element struct tagging
       measured ~2x slower on the dominant stream.
     - The token branch shares ONE let1-bound regex split between the
       bigram run-scan and the shingle array (the split is the
-      expensive part of both; the separate operators each paid it).
+      expensive part of both).
     - The per-doc char length + top-bigram ride the explode as ONE
       synthetic ``fam='len'`` row ('\\n'-delimited, see below) instead
-      of projection siblings of the Generate (the O(len·grams) sibling
-      trap documented in operators/decontam.py) and instead of a
-      join-back.
+      of projection siblings of the Generate (a non-attribute sibling
+      of a Generate is re-evaluated per exploded row: O(len·grams);
+      546 s vs 8 s on a 5000-doc corpus) and instead of a join-back.
     - Model + index come back in ONE driver-bounded collect (model:
-      n-gram vocabulary ≤ |alphabet|³, same argument as
-      operators/lm.train_char_lm_compact; index: benchmark-membership-
+      n-gram vocabulary ≤ |alphabet|³; index: benchmark-membership-
       bounded) and re-enter as broadcast LocalRelations — zero
       distributed broadcast-stage materializations.
     - NO persist of the exploded relation: it is gram-occurrence-sized
@@ -305,9 +303,9 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
       measured equal-or-cache-slower at bench scale too (the cache
       write+read round-trip cancels the explode it saves).
 
-    The standalone operators (operators/lm.py, repetition.py,
-    decontam.py) remain the composable forms; this body is their
-    fusion for the one slot that wants all three signals.
+    This body is the only implementation of the repetition and
+    decontamination signals; its LM math matches operators/lm.py, which
+    the streaming quality gate uses.
     """
     # fan_out: the scans fan out into expression-dense explodes and
     # nothing downstream repartitions on its own (round-10 A/B: -9% at
@@ -361,14 +359,14 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The top bigram is computed as a pure array expression (sort the
     # bigram array, then one run-length scan via F.aggregate) instead
     # of the explode → groupBy(doc, gram) → groupBy(doc) shape the
-    # standalone operators/repetition.py uses: per doc the work is
-    # O(n log n) in tokens and entirely inside whole-stage codegen, and
+    # oracle uses: per doc the work is O(n log n) in tokens and
+    # entirely inside whole-stage codegen, and
     # it removes two shuffle stages plus a doc-keyed join from the
     # slot. Tie-break equivalence: array_sort orders by UTF8String
     # binary comparison — the same ordering max(struct(cnt, gram)) and
     # the oracle's ORDER BY cnt DESC, gram DESC use — and the scan
     # replaces the best run on (cnt, gram) strictly-greater, so the
-    # winner is identical (property-pinned against top_ngram_stats in
+    # winner is identical (property-pinned against the oracle's shape in
     # tests/test_corpus_plans.py).
     st = lambda fam, g: F.struct(F.lit(fam).alias("fam"), g.alias("gram"))
 
@@ -377,8 +375,8 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluates once per row, not once per referenced field. NULL text
     # encodes its (NULL) char length as '' — concat_ws would otherwise
     # silently DROP the NULL field and shift the layout (round-12
-    # self-review); the unpack maps '' back to NULL, mirroring
-    # top_ngram_stats' NULL n_chars on NULL text.
+    # self-review); the unpack maps '' back to NULL, mirroring the
+    # oracle's NULL n_chars on NULL text.
     #
     # The encoded payload is (n_chars, top_cnt, LENGTH(top_gram)) — the
     # gram string itself is never output (only its length feeds
@@ -510,18 +508,22 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # model counts and decontam-index hits share the SAME join key
     # (the gram) over DISJOINT fam slices, so they ship as ONE merged
     # broadcast relation (round 13: one broadcast build job and one
-    # probe per row instead of two). Payload NULLs keep the semantics
-    # exact: an lm gram landing on an index-only entry reads __mcnt
-    # NULL (coalesced to 0, identical to no match); a dec gram landing
-    # on a model-only entry reads __hit NULL (sum skips it).
-    mi_pdf = mdl_pdf.rename(
-        columns={"gram": "__mg", "mcnt": "__mcnt"}
-    ).merge(
-        idx_pdf.rename(columns={"gram": "__mg"}), on="__mg", how="outer"
+    # probe per row instead of two). The outer merge's gaps are filled
+    # with 0, which keeps the semantics exact: an lm gram landing on an
+    # index-only entry reads __mcnt 0 (identical to no match, which is
+    # coalesced to 0); a dec gram landing on a model-only entry adds
+    # __hit 0 to a sum whose no-match NULLs are coalesced to 0 too.
+    # Plain numpy integer columns keep the relation independent of the
+    # session's Arrow conf: nullable Int64/Int32 reach the non-Arrow
+    # createDataFrame path as float values its LongType check rejects.
+    mi_pdf = (
+        mdl_pdf.rename(columns={"gram": "__mg", "mcnt": "__mcnt"})
+        .merge(
+            idx_pdf.rename(columns={"gram": "__mg"}), on="__mg", how="outer"
+        )
+        .fillna({"__mcnt": 0, "__hit": 0})
+        .astype({"__mcnt": "int64", "__hit": "int32"})
     )
-    # nullable integer dtypes: the outer merge introduces NaNs, and
-    # Arrow refuses float-NaN -> integer casts
-    mi_pdf = mi_pdf.astype({"__mcnt": "Int64", "__hit": "Int32"})
     mi_df = spark.createDataFrame(
         mi_pdf, "__mg string, __mcnt long, __hit int"
     )

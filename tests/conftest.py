@@ -37,9 +37,8 @@ SLOW_TESTS = {
     "test_driver_contract.py::test_vanilla_session_from_neutral_cwd",
     # multi-second streaming executions (fast twins remain:
     # test_streaming_tumbling_equals_batch, test_streamed_scores_equal_
-    # batch_scores, session-window + stateful profiles)
+    # batch_scores, the session-window profiles)
     "test_streaming_neardup.py::test_multibatch_greedy_admission_matches_duckdb_fold",
-    "test_streaming_scd.py::test_streamed_history_equals_one_shot_build",
     "test_streaming_dedup.py::test_streaming_dedup_across_batches",
     "test_streaming_neardup.py::test_streaming_dedup_across_batches",
     "test_streaming_dedup.py::test_rocksdb_provider_pinned_and_state_bounded",

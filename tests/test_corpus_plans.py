@@ -95,39 +95,75 @@ def test_mix_split_shards_invariants(spark):
 def test_top_bigram_run_scan_matches_two_level_aggregate(spark):
     """Docstring theorem of plans.corpus._top_bigram: the sorted
     run-length scan picks the SAME (count, gram) winner — including the
-    (cnt DESC, gram DESC) tie-break — as operators/repetition.
-    top_ngram_stats' explode -> groupBy(doc, gram) -> max(struct)
-    shape, on randomized documents engineered to produce count ties,
-    single-token docs, and empty strings."""
+    (cnt DESC, gram DESC) tie-break — as the two-level aggregate of the
+    corpus_quality_filter oracle (explode -> GROUP BY (doc, gram) ->
+    row_number() per doc), run by DuckDB over the same randomized
+    documents, engineered to produce count ties, single-token docs, and
+    empty strings."""
     import random
 
+    import duckdb
+
     from sports_stats_data_pipeline_spark.functions.text import let1, tokens
-    from sports_stats_data_pipeline_spark.operators.repetition import (
-        top_ngram_stats,
-    )
     from sports_stats_data_pipeline_spark.plans.corpus import _top_bigram
 
     rng = random.Random(0xC0FFEE)
     vocab = ["a", "b", "ab", "ba", "aa", "zz", "q"]
-    rows = [("",), ("solo",), ("x y x y",), ("t t t",)]
-    for i in range(200):
+    texts = ["", "solo", "x y x y", "t t t"]
+    for _ in range(200):
         n = rng.randint(1, 30)
-        rows.append((" ".join(rng.choice(vocab) for _ in range(n)),))
-    df = spark.createDataFrame(rows, "text string").withColumn(
-        "doc_id", F.monotonically_increasing_id()
+        texts.append(" ".join(rng.choice(vocab) for _ in range(n)))
+    rows = list(enumerate(texts))
+    got = sorted(
+        tuple(r)
+        for r in spark.createDataFrame(rows, "doc_id long, text string")
+        .select(
+            "doc_id",
+            let1(tokens("text"), lambda tk: _top_bigram(tk)).alias("top"),
+        )
+        .select("doc_id", "top.c", "top.g")
+        .collect()
     )
-    expr = df.select(
-        "doc_id",
-        let1(tokens("text"), lambda tk: _top_bigram(tk)).alias("top"),
-    ).select(
-        "doc_id",
-        F.col("top.c").alias("cnt"),
-        F.col("top.g").alias("gram"),
-    )
-    ref = top_ngram_stats(df, n=2).select(
-        "doc_id",
-        F.col("top_gram_count").alias("cnt"),
-        F.col("top_gram").alias("gram"),
-    )
-    diff = expr.exceptAll(ref).unionByName(ref.exceptAll(expr))
-    assert diff.count() == 0, diff.limit(10).collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = con.execute(
+        """
+        WITH t AS (
+          SELECT doc_id, string_split_regex(text, '\\s+') AS toks
+          FROM documents
+        ), g AS (
+          SELECT doc_id,
+                 unnest(CASE WHEN len(toks) >= 2
+                   THEN list_transform(range(1, len(toks)),
+                          p -> toks[p] || ' ' || toks[p+1])
+                   ELSE [array_to_string(toks, ' ')] END) AS gram
+          FROM t
+        ), c AS (
+          SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY ALL
+        )
+        SELECT doc_id, cnt, gram
+        FROM c
+        QUALIFY row_number() OVER (
+          PARTITION BY doc_id ORDER BY cnt DESC, gram DESC) = 1
+        ORDER BY doc_id
+        """
+    ).fetchall()
+    assert got == want
+
+
+def test_quality_filter_same_rows_with_arrow_off(spark):
+    """The slot must not depend on the session's Arrow conf: the model +
+    index broadcast relation is built from pandas, and the non-Arrow
+    createDataFrame path type-checks every value row by row."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        on = corpus_quality_filter(spark, SF).collect()
+        spark.conf.set(key, "false")
+        off = corpus_quality_filter(spark, SF).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert len(on) == 500
+    assert sorted(map(tuple, off)) == sorted(map(tuple, on))

@@ -1,10 +1,10 @@
-"""Capture .explain("formatted") for every query slot the round-13
-optimization touched, for plans/r13/<slot>_{before,after}.txt.
+"""Capture .explain("formatted") for the query slots an optimization
+touched, for plans/<round>/<slot>_{before,after}.txt.
 
-Run from the repo root whose code should be captured (a round-12-HEAD
-worktree for *_before.txt, HEAD for *_after.txt):
+Run from the repo root whose code should be captured (a worktree of the
+base revision for *_before.txt, HEAD for *_after.txt):
 
-    python tools/capture_plans_r13.py <out_dir> <suffix>
+    python tools/capture_plans.py <out_dir> <suffix> --slots a,b,...
 
 Uses the same session factory and sf0.1 data as bench.py so the plans
 match what the bench measures. Building some of these DataFrames
@@ -15,6 +15,7 @@ bench times, so the captured plan is the plan of record.
 
 from __future__ import annotations
 
+import argparse
 import datetime
 import io
 import os
@@ -29,14 +30,6 @@ from sports_stats_data_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: slots whose plan shape the round-13 diff (bdb9eaa..HEAD) changed.
-TOUCHED = (
-    "corpus_quality_filter",
-    "data_quality_report",
-    "events_props_pivot",
-    "orders_by_period_rangejoin",
-)
-
 
 def _explain_text(df) -> str:
     buf = io.StringIO()
@@ -46,19 +39,28 @@ def _explain_text(df) -> str:
 
 
 def main() -> None:
-    out_dir = Path(sys.argv[1])
-    suffix = sys.argv[2]
-    out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark("capture_plans_r13")
-    spark.sparkContext.setLogLevel("ERROR")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("out_dir", type=Path)
+    ap.add_argument("suffix", help="file-name suffix, e.g. before / after")
+    ap.add_argument(
+        "--slots", required=True, help="comma-separated registry slot names"
+    )
+    args = ap.parse_args()
+    out_dir, suffix = args.out_dir, args.suffix
     reg = all_registries()
+    slots = [s for s in args.slots.split(",") if s]
+    unknown = sorted(set(slots) - set(reg.queries))
+    if unknown:
+        ap.error(f"unknown slots: {', '.join(unknown)}")
+    out_dir.mkdir(parents=True, exist_ok=True)
+    spark = get_spark("capture_plans")
+    spark.sparkContext.setLogLevel("ERROR")
     stamp = datetime.datetime.now(datetime.timezone.utc).isoformat()
-    for name in TOUCHED:
+    for name in slots:
         df = reg.queries[name](spark, SF_DIR)
         text = (
-            f"# {name} — explain('formatted') at sf0.1, {suffix} "
-            f"round-13 optimization\n"
-            f"# captured {stamp} by tools/capture_plans_r13.py\n\n"
+            f"# {name} — explain('formatted') over {SF_DIR}, {suffix}\n"
+            f"# captured {stamp} by tools/capture_plans.py\n\n"
             + _explain_text(df)
         )
         (out_dir / f"{name}_{suffix}.txt").write_text(text)
