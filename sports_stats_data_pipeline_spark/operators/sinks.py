@@ -1,19 +1,34 @@
-"""Crash-safe replacement of a parquet sink directory.
+"""Crash-safe writes to a parquet sink directory: replace and append.
 
 Parquet has no transactional MERGE (that is Delta's job at production
 scale); this is the no-Delta stand-in shared by the batch scrape ingest
-(sources.scrape_pipeline) and the streaming upsert (streaming.pipeline):
+(sources.scrape_pipeline), the streaming upsert (streaming.pipeline) and
+the near-dup admission store (streaming.dedup_lsh). Every write first
+goes to ``<sink>.staging``; then one of two moves publishes it.
 
-    write ``<sink>.staging`` → rename live aside to ``<sink>.old`` →
-    promote staging → drop ``.old``
+**Replace** (:func:`promote_staging`)::
 
-The protocol guarantees CRASH-RECOVERABILITY, not continuous read
-availability: between the two renames the live path briefly does not
-exist (a concurrent reader can see FileNotFoundError for that instant),
-but a crash at ANY point leaves a state from which :func:`recover_sink`
-restores a complete sink — previously merged rows are never lost. The
+    rename live aside to ``<sink>.old`` → promote staging → drop ``.old``
+
+Crash contract: CRASH-RECOVERABILITY, not continuous read availability.
+Between the two renames the live path briefly does not exist (a
+concurrent reader can see FileNotFoundError for that instant), but a
+crash at ANY point leaves a state from which :func:`recover_sink`
+restores a complete sink — previously written rows are never lost. The
 old rmtree-then-rename approach had a window where a crash lost the
 entire sink and a replayed batch would rebuild from itself alone.
+
+**Append** (:func:`append_staging`): move staging's non-empty data
+files into the live sink one ``os.rename`` at a time, O(Δ) — the live
+files are never rewritten; the first write of a sink promotes instead.
+
+Crash contract: the per-file renames are not atomic as a group. A crash
+mid-move leaves the live sink complete with a PREFIX of the append's
+files visible, and :func:`recover_sink` discards the rest with the
+staging dir. Callers therefore append rows whose keys are absent from
+the live sink and re-derive the remainder on rerun or replay by
+anti-joining against it: rows already moved are skipped, the rest are
+written again, and the sink converges to the uninterrupted result.
 """
 
 from __future__ import annotations
@@ -32,6 +47,25 @@ def promote_staging(sink_path: str) -> None:
     os.rename(sink_path + ".staging", sink_path)
     if os.path.exists(old):
         shutil.rmtree(old)
+
+
+def append_staging(sink_path: str, prefix: str) -> None:
+    """Append a fully-written ``<sink>.staging`` dir to the live sink:
+    move each non-empty data file in as ``<prefix><file name>``, then
+    drop staging — so an append of zero rows adds no file. When the sink
+    does not exist yet, promote staging instead (its schema-only file
+    then creates an empty sink). Crash contract: module docstring."""
+    import pyarrow.parquet as pq
+
+    staging = sink_path + ".staging"
+    if not os.path.exists(sink_path):
+        promote_staging(sink_path)
+        return
+    for f in sorted(os.listdir(staging)):
+        src = os.path.join(staging, f)
+        if f.endswith(".parquet") and pq.read_metadata(src).num_rows:
+            os.rename(src, os.path.join(sink_path, prefix + f))
+    shutil.rmtree(staging)
 
 
 def recover_sink(sink_path: str) -> None:

@@ -12,7 +12,8 @@ Design departures for a distributed engine:
   tests run hermetically and production can plug requests/httpx;
 - randomness comes from a seeded per-partition RNG → deterministic tests;
 - rate limiting is per partition: cap global request concurrency by
-  ``repartition(n)`` on the key list, not by a global lock (there is no
+  the key list's partition count (:func:`url_relation`'s ``partitions``
+  or ``fetch_urls``' ``concurrency``), not by a global lock (there is no
   cross-executor clock at cluster scale — n_partitions × per-partition
   rate is the throughput contract, matching the reference's single-loop
   sleep pattern when n=1).
@@ -27,7 +28,7 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 #: transport contract: url -> (status_code, body). Exceptions are treated
 #: as transient failures (retried like non-200s).
@@ -95,26 +96,55 @@ def safe_fetch(
     return None
 
 
-def fetch_urls(
+def url_relation(
+    spark: SparkSession, urls: list[str], partitions: int
+) -> DataFrame:
+    """``urls`` deduped on the driver (first occurrence kept) as a
+    one-column ``url`` relation of ``partitions`` slices, built in the
+    JVM. The slices deal the URLs round-robin, so a contiguous run of
+    them (the new keys a delta run appends to a known list) still
+    spreads over every fetch stream.
+
+    The list crosses py4j as ONE string literal that the optimizer
+    constant-folds into an array, indexed by a ``range`` — not a
+    ``createDataFrame`` of a Python list, whose Python-RDD leaf pays a
+    Python-worker round per slice on every evaluation. ``range`` slices
+    also give the fetch stage its parallelism without a shuffle.
+    """
+    from pyspark.sql import functions as F
+
+    urls = list(dict.fromkeys(urls))
+    if any("\n" in u for u in urls):
+        raise ValueError("url_relation: a URL contains a newline")
+    n = len(urls)
+    p = max(1, min(partitions, n))
+    dealt = [u for k in range(p) for u in urls[k::p]]
+    arr = F.split(F.lit("\n".join(dealt)), "\n")
+    return spark.range(0, n, 1, p).select(
+        F.get(arr, F.col("id").cast("int")).alias("url")
+    )
+
+
+def map_fetched_pages(
     url_df: DataFrame,
     transport: Transport,
-    cfg: FetchConfig | None = None,
+    cfg: FetchConfig | None,
+    to_frame: Callable[[list[str], list[str]], pd.DataFrame],
+    schema: str,
     url_col: str = "url",
-    concurrency: int | None = None,
 ) -> DataFrame:
-    """url DataFrame -> (url, html) DataFrame via Arrow-batched
-    mapInPandas; failed URLs are dropped, not errored (reference
-    semantics, fighters_scraper.py:66-67 / 181-182).
-
-    ``concurrency`` bounds parallel fetch streams by repartitioning the
-    key list (rate limit I2 applies within each partition).
-    """
+    """The one per-partition fetch loop, as an Arrow-batched mapInPandas
+    over ``url_df``'s partitions: each URL goes through
+    :func:`safe_fetch` (failed URLs are dropped, not errored — reference
+    semantics, fighters_scraper.py:66-67 / 181-182) with the rate-limit
+    sleep between requests, and ``to_frame(urls, bodies)`` turns each
+    batch's fetched pages into output rows of ``schema`` inside the same
+    Python worker — a caller that parses there never ships the HTML back
+    to the JVM."""
     from .tables import ensure_session_confs
 
     ensure_session_confs(url_df.sparkSession)
     cfg = cfg or FetchConfig()
-    if concurrency:
-        url_df = url_df.repartition(concurrency)
 
     def fetch_batches(
         batches: Iterator[pd.DataFrame],
@@ -136,8 +166,31 @@ def fetch_urls(
                 if body is not None:
                     out_urls.append(url)
                     out_html.append(body)
-            yield pd.DataFrame({"url": out_urls, "html": out_html})
+            yield to_frame(out_urls, out_html)
 
-    return url_df.select(url_col).mapInPandas(
-        fetch_batches, schema="url string, html string"
+    return url_df.select(url_col).mapInPandas(fetch_batches, schema=schema)
+
+
+def _pages_frame(urls: list[str], bodies: list[str]) -> pd.DataFrame:
+    return pd.DataFrame({"url": urls, "html": bodies})
+
+
+def fetch_urls(
+    url_df: DataFrame,
+    transport: Transport,
+    cfg: FetchConfig | None = None,
+    url_col: str = "url",
+    concurrency: int | None = None,
+) -> DataFrame:
+    """url DataFrame -> (url, html) DataFrame via
+    :func:`map_fetched_pages`; failed URLs are dropped, not errored.
+
+    ``concurrency`` bounds parallel fetch streams by repartitioning the
+    key list (rate limit I2 applies within each partition).
+    """
+    if concurrency:
+        url_df = url_df.repartition(concurrency)
+    return map_fetched_pages(
+        url_df, transport, cfg, _pages_frame, "url string, html string",
+        url_col,
     )

@@ -18,7 +18,9 @@ reference's conventions: fighter fields -> None, fight stats -> "N/A"
 real sentinels to normalize.
 
 The Spark face of these functions is :func:`parse_pages` — an
-Arrow-batched mapInPandas over (url, html) rows.
+Arrow-batched mapInPandas over (url, html) rows — and
+:func:`parsed_frame`, its per-batch body, which the scrape ingest runs
+inside its fetch worker so HTML never returns to the JVM.
 """
 
 from __future__ import annotations
@@ -249,6 +251,22 @@ def register_fight_links_udtf(spark, name: str = "fight_links"):
     return wrapped
 
 
+def parsed_frame(
+    urls, htmls, kind: str, field_names: list[str]
+) -> pd.DataFrame:
+    """One batch of (url, html) pages -> parsed rows (``url`` plus
+    ``field_names``); unparseable pages yield no row (P5). Shared by
+    :func:`parse_pages` and the fused fetch+parse of
+    ``scrape_pipeline.ingest``."""
+    parse = parse_fighter_page if kind == "fighter" else parse_fight_page
+    rows = []
+    for url, html in zip(urls, htmls):
+        parsed = parse(html)
+        if parsed is not None:
+            rows.append({"url": url} | {k: parsed.get(k) for k in field_names})
+    return pd.DataFrame(rows, columns=["url", *field_names], dtype=object)
+
+
 def parse_pages(
     pages_df: DataFrame, kind: str, schema: str, field_names: list[str]
 ) -> DataFrame:
@@ -262,20 +280,9 @@ def parse_pages(
     from .tables import ensure_session_confs
 
     ensure_session_confs(pages_df.sparkSession)
-    parse = parse_fighter_page if kind == "fighter" else parse_fight_page
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                parsed = parse(html)
-                if parsed is not None:
-                    rows.append(
-                        {"url": url}
-                        | {k: parsed.get(k) for k in field_names}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", *field_names], dtype=object
-            )
+            yield parsed_frame(pdf["url"], pdf["html"], kind, field_names)
 
     return pages_df.mapInPandas(run, schema=schema)

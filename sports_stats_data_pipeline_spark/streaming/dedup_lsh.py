@@ -18,9 +18,9 @@ against accumulated state that outgrows the keyed state store):
 3. verify: exact Jaccard over shingle sets, threshold 0.6 in integer
    arithmetic (10·|∩| ≥ 6·|∪|) — same contract as the batch operator;
 4. admit: novel docs are appended to the corpus + band index through the
-   stage→rename-aside→promote protocol (operators.sinks), so a crash
-   mid-batch never corrupts the store and a replayed batch re-derives
-   the same decisions (dup rows lose the join again — idempotent).
+   staged append of operators.sinks, so a crash mid-batch never
+   corrupts the store and a replayed batch re-derives the same
+   decisions (dup rows lose the join again — idempotent).
 
 The persisted store holds (doc_id, text, shingles) plus the exploded
 band index (band_key, doc_id). Storing shingles trades space for
@@ -42,7 +42,7 @@ from ..functions.text import (
     shingle_hashes,
     shingles,
 )
-from ..operators.sinks import promote_staging, recover_sink
+from ..operators.sinks import append_staging, recover_sink
 
 #: bucket cap mirrored from the batch operator — a super-bucket in the
 #: index is skipped, not joined (bounded-recall contract, skew guard).
@@ -208,9 +208,9 @@ def run_streaming_neardup_dedup(
     index. Returns the final store as a DataFrame.
 
     Crash-safe and replay-idempotent: the store is advanced with the
-    stage→rename-aside→promote protocol, and a replayed batch re-runs
-    the same anti-join against the promoted store (admitted rows are
-    re-admitted by doc_id anti-join, duplicates re-dropped)."""
+    staged append of operators.sinks, and a replayed batch re-runs the
+    same anti-join against the live store (already-admitted rows fall
+    to the doc_id anti-join, duplicates are re-dropped)."""
     recover_sink(store_path)
     stream = (
         spark.readStream.schema(doc_schema)
@@ -231,38 +231,19 @@ def run_streaming_neardup_dedup(
             novel = novel.join(
                 existing.select("doc_id"), "doc_id", "left_anti"
             )
-            # O(Δ) append (round 13, guide §1.2): write ONLY the novel
-            # rows and move their data files into the live store —
-            # the former existing∪novel full-store rewrite re-wrote
-            # every previously admitted (text, shingles, bands) row on
-            # EVERY batch, O(total) per batch, exactly the reference
-            # pathology this module's docstring criticizes. Crash
-            # contract, batch >= 1: the per-file renames are not
-            # atomic as a group, but a crash mid-move replays the
-            # batch (foreachBatch is at-least-once) and the replay
-            # heals — already-moved docs fall to the anti-join above,
-            # and a partially-visible batch cannot flip any decision:
-            # the store's admitted set is an independent set under the
-            # near-dup relation (if Y~Z with Z admitted after Y in the
-            # same batch, Z would have been dropped against Y —
-            # contradiction), so re-checking a survivor against a
-            # partial batch suffix finds no new match. Batch 0 keeps
-            # the staged-replace promote (creates the store
-            # atomically).
-            staging = store_path + ".staging"
-            novel.write.mode("overwrite").parquet(staging)
-            for f in os.listdir(staging):
-                if f.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(staging, f),
-                        os.path.join(store_path, f"b{batch_id}_{f}"),
-                    )
-            import shutil
-
-            shutil.rmtree(staging)
-        else:
-            novel.write.mode("overwrite").parquet(store_path + ".staging")
-            promote_staging(store_path)
+            # O(Δ) append: only the novel rows are written, and their
+            # data files move into the live store (operators.sinks; with
+            # no store yet, batch 0 is promoted instead). A crash
+            # mid-move replays the batch (foreachBatch is at-least-once)
+            # and the replay heals — already-moved docs fall to the
+            # anti-join above, and a partially-visible batch cannot flip
+            # any decision: the store's admitted set is an independent
+            # set under the near-dup relation (if Y~Z with Z admitted
+            # after Y in the same batch, Z would have been dropped
+            # against Y — contradiction), so re-checking a survivor
+            # against a partial batch suffix finds no new match.
+        novel.write.mode("overwrite").parquet(store_path + ".staging")
+        append_staging(store_path, f"b{batch_id}_")
         # release the batch's persisted signature relation — a long-
         # running stream must not accumulate one pinned relation per
         # batch (targeted unpersist, NOT clearCache: the session is

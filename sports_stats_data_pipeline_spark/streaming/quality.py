@@ -89,9 +89,8 @@ def run_streaming_quality(
     therefore keyed by batch id — each micro-batch OVERWRITES its own
     deterministic ``batch=<id>`` directory, so a replay rewrites the
     same rows instead of appending duplicates (the parquet-sink
-    idempotence pattern; the keyed alternative is
-    operators.merge.insert_if_absent as used by
-    pipeline.run_streaming_upsert).
+    idempotence pattern; the keyed alternative is the anti-join +
+    operators.sinks.append_staging of pipeline.run_streaming_upsert).
     """
     lm = load_char_lm(spark, model_path)
     # persist the (tiny) model tables: every micro-batch broadcasts

@@ -350,3 +350,145 @@ def test_requests_transport_wiring(monkeypatch):
         "timeout": 15,
         "ua": "ua-test/1",
     }
+
+
+def _data_files(sink) -> dict[str, int]:
+    import os
+
+    return {
+        f: os.path.getsize(os.path.join(sink, f))
+        for f in os.listdir(sink)
+        if f.endswith(".parquet")
+    }
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_noop_and_delta_runs_leave_existing_files_untouched(
+    spark, fleet_transport, tmp_path
+):
+    """The sink grows by appended files only: a delta run adds files and
+    keeps every cold file's name and size; a run with nothing new (f5
+    fails again, everything else is sunk) adds no file at all."""
+    urls, transport = fleet_transport
+    sink = str(tmp_path / "sink")
+    ingest(spark, urls[:6], transport, sink, cfg=_cfg(), concurrency=2)
+    cold = _data_files(sink)
+
+    df = ingest(spark, urls, transport, sink, cfg=_cfg(), concurrency=2)
+    delta = _data_files(sink)
+    assert {f: delta[f] for f in cold} == cold
+    assert len(delta) > len(cold)
+    assert df.count() == 11
+
+    df = ingest(spark, urls, transport, sink, cfg=_cfg(), concurrency=2)
+    assert _data_files(sink) == delta
+    assert df.count() == 11
+
+
+def test_crash_mid_append_converges_without_refetch(
+    spark, fleet_transport, tmp_path, monkeypatch
+):
+    """Kill a delta run after its FIRST data file moved into the live
+    sink, then rerun the same URLs: the sink equals one full run (same
+    rows, unique keys) and the URLs of the file already moved are not
+    fetched again (operators.sinks append crash contract)."""
+    import os
+
+    urls, transport = fleet_transport
+    sink = str(tmp_path / "sink")
+    ingest(spark, urls[:6], transport, sink, cfg=_cfg(), concurrency=2)
+
+    real_rename = os.rename
+    moved = []
+
+    def dying_rename(src, dst):
+        if os.path.dirname(dst) == sink:
+            if moved:
+                raise RuntimeError("injected crash: killed mid-append")
+            moved.append(dst)
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", dying_rename)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ingest(spark, urls, transport, sink, cfg=_cfg(), concurrency=2)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert os.path.exists(sink + ".staging")  # the unmoved rest is real
+    partial = {r["url"] for r in spark.read.parquet(sink).collect()}
+    in_moved = partial - set(urls[:6])
+    assert in_moved, "the first appended file carried no new rows"
+
+    calls_before = len(transport.calls)
+    resumed = ingest(spark, urls, transport, sink, cfg=_cfg(), concurrency=2)
+    refetched = set(transport.calls[calls_before:]) & in_moved
+    assert not refetched, f"already-appended URLs fetched again: {refetched}"
+
+    fresh_transport = FlakyTransport(
+        {u: list(r) for u, r in transport.script.items()}
+    )
+    full = ingest(
+        spark, urls, fresh_transport, str(tmp_path / "full"), cfg=_cfg(),
+        concurrency=2,
+    )
+    assert _rows(resumed) == _rows(full)
+    assert resumed.select("url").distinct().count() == resumed.count() == 11
+
+
+def test_ingest_plan_one_python_crossing_with_arrow_on_and_off(
+    spark, fleet_transport, tmp_path, monkeypatch
+):
+    """The ingest write is one fused fetch+parse MapInPandas over a JVM
+    URL relation — no Python-RDD leaf (``Scan ExistingRDD``) — and the
+    session's Arrow setting changes neither the plan nor the rows."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    urls, transport = fleet_transport
+    plans = []
+    real_parquet = DataFrameWriter.parquet
+
+    def capturing_parquet(self, path, *args, **kwargs):
+        if path.endswith(".staging"):
+            plans.append(
+                self._df._jdf.queryExecution().executedPlan().toString()
+            )
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capturing_parquet)
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(conf)
+    rows = {}
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(conf, arrow)
+            sink = str(tmp_path / f"sink_{arrow}")
+            ingest(spark, urls[:6], transport, sink, cfg=_cfg(), concurrency=2)
+            df = ingest(spark, urls, transport, sink, cfg=_cfg(), concurrency=2)
+            rows[arrow] = _rows(df)
+    finally:
+        spark.conf.set(conf, prior)
+    assert len(plans) == 4  # cold + delta, Arrow on and off
+    for plan in plans:
+        assert plan.count("MapInPandas") == 1, plan
+        assert "ExistingRDD" not in plan, plan
+        assert "Range" in plan, plan
+    assert rows["true"] == rows["false"]
+    assert len(rows["true"]) == 11
+
+
+def test_url_relation_dedups_and_deals_round_robin(spark):
+    """The JVM URL relation keeps each URL once, deals a contiguous run
+    of new URLs over every slice, and rejects a URL it cannot carry."""
+    from sports_stats_data_pipeline_spark.sources.fetch import url_relation
+
+    urls = [f"u{i}" for i in range(8)] + ["u0", "u3"]
+    rel = url_relation(spark, urls, 4)
+    parts = rel.rdd.glom().map(lambda rows: [r["url"] for r in rows]).collect()
+    assert len(parts) == 4
+    assert sorted(u for p in parts for u in p) == [f"u{i}" for i in range(8)]
+    # the tail u4..u7 (a delta appended to a known list) lands in every slice
+    assert all(set(p) & {"u4", "u5", "u6", "u7"} for p in parts)
+    assert url_relation(spark, [], 4).count() == 0
+    with pytest.raises(ValueError, match="newline"):
+        url_relation(spark, ["a\nb"], 4)

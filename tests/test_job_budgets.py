@@ -82,3 +82,54 @@ def test_extended_slots_within_job_budgets(spark):
         if n > budget:
             over.append(f"{name}: {n} jobs > budget {budget}")
     assert not over, "; ".join(over)
+
+
+#: ingest phase -> (measured, budget): Spark jobs per
+#: ``scrape_pipeline.ingest`` call on the fixture transport below,
+#: budgeted like JOB_BUDGETS (measured x ~1.5, rounded up). The
+#: write path is fixed cost per job, not per page, so the count is the
+#: quantity to pin: cold = the one fused fetch+parse write; delta and
+#: no-op add the sink's url-column broadcast for the anti-join. The
+#: createDataFrame + two-mapInPandas + full-rewrite merge plan took
+#: 6 / 7 / 7 and must fail these budgets.
+INGEST_JOB_BUDGETS = {
+    "cold": (1, 2),
+    "delta": (2, 3),
+    "noop": (2, 3),
+}
+
+
+def test_ingest_phases_within_job_budgets(spark, tmp_path):
+    from sports_stats_data_pipeline_spark.sources.fetch import FetchConfig
+    from sports_stats_data_pipeline_spark.sources.scrape_pipeline import (
+        ingest,
+    )
+
+    from . import fixtures_html as fx
+
+    urls = [f"http://example.com/fighter-details/j{i}" for i in range(40)]
+    pages = {u: (200, fx.fighter_page(f"F{i}", record=f"{i}-0-0"))
+             for i, u in enumerate(urls)}
+    pages[urls[3]] = (500, "")  # retried, then dropped every run
+
+    def transport(url):
+        return pages[url]
+
+    cfg = FetchConfig(sleep=lambda s: None)
+    sink = str(tmp_path / "sink")
+    tracker = spark.sparkContext.statusTracker()
+    over: list[str] = []
+    for phase, run_urls in (("cold", urls[:30]), ("delta", urls),
+                            ("noop", urls)):
+        grp = f"job_budget_ingest_{phase}"
+        spark.sparkContext.setJobGroup(grp, phase)
+        try:
+            ingest(spark, run_urls, transport, sink, cfg=cfg, concurrency=4)
+        finally:
+            spark.sparkContext.setJobGroup("job_budget_idle", "idle")
+        n = len(tracker.getJobIdsForGroup(grp))
+        if n > INGEST_JOB_BUDGETS[phase][1]:
+            over.append(f"{phase}: {n} jobs > budget "
+                        f"{INGEST_JOB_BUDGETS[phase][1]}")
+    assert not over, "; ".join(over)
+    assert spark.read.parquet(sink).count() == 39

@@ -518,26 +518,42 @@ def test_stream_crash_mid_admission_converges(spark, tmp_path, monkeypatch):
         ).parquet(landing)
 
     # ---- crashed run: die MID-APPEND of batch >= 1 (first store file
-    # moved, the rest still in staging — partial visibility)
+    # moved, the rest still in staging — partial visibility). A later
+    # batch that admits nothing (the 30x replica: every batch carries a
+    # clone of every text, so batches 1-2 admit zero docs) moves no
+    # file, since an append adds only non-empty files; it dies instead
+    # after its (empty) move loop, before its staging is dropped and
+    # its checkpoint commits — the state the replay must heal either way.
     crash_store = str(tmp_path / "crash_store")
-    real_rename = os.rename
+    staging = crash_store + ".staging"
+    real_rename, real_rmtree = os.rename, shutil.rmtree
     moved = {"n": 0}
+    crashed: list[str] = []
 
     def dying_rename(src, dst):
         if isinstance(dst, str) and dst.startswith(
             os.path.join(crash_store, "b")
         ):
             moved["n"] += 1
-            if moved["n"] == 2:  # one file of batch 1 is in; die here
+            if moved["n"] == 2 and not crashed:  # one file is in; die
+                crashed.append("rename")
                 raise RuntimeError("injected crash: killed mid-append")
         return real_rename(src, dst)
 
+    def dying_rmtree(path, *args, **kwargs):
+        if path == staging and not crashed:
+            crashed.append("cleanup")
+            raise RuntimeError("injected crash: killed mid-append")
+        return real_rmtree(path, *args, **kwargs)
+
     monkeypatch.setattr(os, "rename", dying_rename)
+    monkeypatch.setattr(shutil, "rmtree", dying_rmtree)
     with pytest.raises(StreamingQueryException, match="injected crash"):
         DL.run_streaming_neardup_dedup(spark, landing, crash_store)
     monkeypatch.setattr(os, "rename", real_rename)
-    assert moved["n"] >= 2, "append path never reached the move loop"
-    assert os.path.exists(crash_store + ".staging")  # the orphan is real
+    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+    assert crashed, "append path never reached the move loop"
+    assert os.path.exists(staging)  # the orphan is real
 
     # ---- resume: same store, same checkpoint — batch 1 replays, the
     # orphan staging is swept by recover_sink, batch 2 completes

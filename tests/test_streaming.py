@@ -1,5 +1,6 @@
 """Structured Streaming tests: stream-to-completion equals batch, and the
-foreachBatch insert-if-absent upsert is idempotent under replay."""
+foreachBatch insert-if-absent upsert is idempotent under replay and
+appends nothing when replayed."""
 
 from __future__ import annotations
 
@@ -37,9 +38,22 @@ def test_streaming_upsert_idempotent_replay(spark, tmp_path):
     assert n1 == spark.read.parquet(f"{SF}/events.parquet").count()
 
     # replay the whole stream into the same sink with a fresh checkpoint
-    # (simulates at-least-once redelivery) -> no duplicates
+    # (simulates at-least-once redelivery) -> no duplicates, and the
+    # O(Delta) append writes nothing: no new data file, existing files
+    # unchanged
+    import os
     import shutil
 
+    def data_files():
+        return {
+            f: os.path.getsize(os.path.join(sink, f))
+            for f in os.listdir(sink)
+            if f.endswith(".parquet")
+        }
+
+    files1 = data_files()
     shutil.rmtree(sink + ".checkpoint")
     out2 = run_streaming_upsert(spark, SF, sink)
+    assert data_files() == files1
     assert out2.count() == n1
+    assert out2.select("event_id").distinct().count() == n1
