@@ -312,7 +312,7 @@ def _time_slot(
     spark, reg, sf_dir, name, *, passes, warmup, run_id, tier, capture=None
 ):
     """Time one slot as a noop-sink power run; returns (min wall, jobs,
-    stages, adjacent per-job constant, ``capture()``).
+    stages, adjacent per-job constant, ``capture()``, every pass wall).
 
     An optional untimed warm-up pass, then the ADJACENT per-job
     constant (between warm-up and timed passes, so it sees the host
@@ -334,19 +334,21 @@ def _time_slot(
     best = float("inf")
     jobs = stages = 0
     captured = None
+    walls = []
     for i in range(passes):
         grp = f"bench_{tier}_{name}_{run_id}_{i}"
         sc.setJobGroup(grp, name)
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
+        walls.append(round(wall, 3))
         if wall < best:
             best = wall
             jobs, stages = _group_counts(spark, grp)
             captured = capture() if capture else None
         sc.setJobGroup(f"bench_{tier}_idle_{run_id}", "between passes")
         spark.catalog.clearCache()
-    return round(best, 3), jobs, stages, job_constant, captured
+    return round(best, 3), jobs, stages, job_constant, captured, walls
 
 
 def _duckdb_calibration(
@@ -456,7 +458,7 @@ def main() -> None:
     hl_jobs: dict[str, int] = {}
     hl_slot_constant: dict[str, float] = {}
     for name in HEADLINE:
-        timings[name], hl_jobs[name], _, hl_slot_constant[name], _ = (
+        timings[name], hl_jobs[name], _, hl_slot_constant[name], _, _ = (
             _time_slot(
                 spark, reg, sf_dir, name,
                 passes=3, warmup=False, run_id=run_id, tier="hl",
@@ -531,7 +533,7 @@ def main() -> None:
         is_mart = name == "incremental_mart_maintenance"
         (
             extended[name], ext_jobs[name], ext_stages[name],
-            ext_slot_constant[name], phases,
+            ext_slot_constant[name], phases, _,
         ) = _time_slot(
             spark, reg, sf_dir, name,
             passes=2, warmup=True, run_id=run_id, tier="ext",

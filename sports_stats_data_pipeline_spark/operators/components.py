@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_relation
+
 
 #: edge count at or below which the fixpoint runs driver-side
 #: (union-find over the collected edge list). The bound is what makes
@@ -160,8 +162,8 @@ def connected_components(
         free_sym()
         spark = nodes.sparkSession
         id_t = nodes.schema[id_col].dataType.simpleString()
-        local = spark.createDataFrame(
-            list(lbl_map.items()), f"id {id_t}, lbl {id_t}"
+        local = local_relation(
+            spark, lbl_map.items(), f"id {id_t}, lbl {id_t}"
         )
         # Output id set matches the distributed loop exactly (round-12
         # self-review): the loop's groupBy(id) both DEDUPES duplicated

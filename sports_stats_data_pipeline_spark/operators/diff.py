@@ -35,6 +35,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_relation
+
 STATUSES = ("added", "removed", "changed", "unchanged")
 
 
@@ -146,16 +148,10 @@ def diff_summary(diff: DataFrame) -> DataFrame:
         ).alias("__c"),
         F.lit(1).cast("long").alias("__w"),
     )
-    # pure-JVM literal relation (explode over a range(1) row), NOT
-    # createDataFrame([rows]): a Python-list DataFrame is a Python-RDD-
-    # backed relation whose every evaluation pays a Python-worker round
-    # per slice (the round-12 streaming-sentinel finding).
-    zero_fill = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(s) for s in STATUSES])
-        ).alias("diff_status"),
-        F.lit(None).cast("string").alias("__c"),
-        F.lit(0).cast("long").alias("__w"),
+    zero_fill = local_relation(
+        spark,
+        [(s, None, 0) for s in STATUSES],
+        "diff_status string, __c string, __w long",
     )
     return (
         exploded.unionByName(zero_fill)

@@ -31,7 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ..sources.tables import local_relation
 
 __all__ = ["resample_ffill"]
 
@@ -92,16 +93,10 @@ def resample_ffill(
             if lo is None:
                 # schema derived from the input, not hardcoded — the
                 # empty path must union cleanly with the non-empty one
-                return events.sparkSession.createDataFrame(
+                return local_relation(
+                    events.sparkSession,
                     [],
-                    T.StructType(
-                        [
-                            T.StructField(key_col, ev.schema["__k"].dataType),
-                            T.StructField("bucket_s", T.LongType()),
-                            T.StructField("value", val_t),
-                            T.StructField("observed", T.IntegerType(), False),
-                        ]
-                    ),
+                    obs.withColumnRenamed("__k", key_col).schema,
                 )
             start_s = start_s if start_s is not None else int(lo - lo % step_s)
             end_s = end_s if end_s is not None else int(hi)

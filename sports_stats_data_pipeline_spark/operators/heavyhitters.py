@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_relation
+
 
 def _mg_update(
     counters: dict[str, int], values: np.ndarray, counts: np.ndarray,
@@ -152,19 +154,12 @@ def heavy_hitters(
     summ = partition_summaries(df, col, cap).collect()
     total = sum(r["weight"] for r in summ if r["value"] is None)
     cands = sorted({r["value"] for r in summ if r["value"] is not None})
-    empty = spark.createDataFrame(
-        [], "value string, n long, total long, freq_bp long"
+    empty = local_relation(
+        spark, [], "value string, n long, total long, freq_bp long"
     )
     if total == 0 or not cands:
         return empty
-    # pandas-backed (Arrow) relation, not a Python tuple list: the
-    # list path is a Python-RDD-backed relation that re-pays a
-    # Python-worker round per slice on every evaluation (and this one
-    # is re-evaluated per broadcast build); the Arrow path evaluates
-    # JVM-side (round-12 streaming-sentinel finding applied here).
-    cand_df = spark.createDataFrame(
-        pd.DataFrame({"value": cands}), "value string"
-    )
+    cand_df = local_relation(spark, [(c,) for c in cands], "value string")
     exact = (
         src.join(F.broadcast(cand_df), "value", "left_semi")
         .groupBy("value")
@@ -284,21 +279,17 @@ def heavy_hitters_grouped(
         else:
             cands.add((r["group"], r["value"]))
     if not cands or not totals_map:
-        return spark.createDataFrame(
+        return local_relation(
+            spark,
             [],
             "group string, value string, n long, total long, "
             "freq_bp long",
         )
-    # pandas-backed (Arrow) relations — same rationale as heavy_hitters
-    cand_df = spark.createDataFrame(
-        pd.DataFrame(sorted(cands), columns=["group", "value"]),
-        "group string, value string",
+    cand_df = local_relation(
+        spark, sorted(cands), "group string, value string"
     )
-    totals = spark.createDataFrame(
-        pd.DataFrame(
-            sorted(totals_map.items()), columns=["group", "total"]
-        ),
-        "group string, total long",
+    totals = local_relation(
+        spark, sorted(totals_map.items()), "group string, total long"
     )
     exact = (
         src.join(F.broadcast(cand_df), ["group", "value"], "left_semi")

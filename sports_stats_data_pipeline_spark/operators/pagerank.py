@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_relation
+
 __all__ = [
     "pagerank",
     "pagerank_fixedpoint",
@@ -331,8 +333,8 @@ def pagerank_fixedpoint(
         spark = edges.sparkSession
         node_t = e_ck.schema["src"].dataType.simpleString()
         ranks = _pagerank_fixedpoint_driver(rows, iterations)
-        return spark.createDataFrame(
-            sorted(ranks.items()), f"node {node_t}, rank bigint"
+        return local_relation(
+            spark, sorted(ranks.items()), f"node {node_t}, rank bigint"
         )
     nodes, contrib_edges, n = _prepare(e_ck, "src", "dst")
     out = _loop(

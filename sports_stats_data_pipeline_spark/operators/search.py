@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..sources.tables import local_relation
 
 __all__ = [
     "term_stats",
@@ -98,7 +99,8 @@ def bm25_topk(
     if not n_docs or avgdl is None:
         # empty corpus: avg() is NULL — return an empty, correctly
         # shaped result rather than a TypeError from float(None)
-        return docs.sparkSession.createDataFrame(
+        return local_relation(
+            docs.sparkSession,
             [],
             docs.select(
                 F.col(id_col),
@@ -222,7 +224,7 @@ def bm25_topk_indexed(
             F.lit(0).cast("long").alias("score_micro"),
             F.lit(0).cast("int").alias("n_query_terms_hit"),
         )
-        return spark.createDataFrame([], empty.schema)
+        return local_relation(spark, [], empty.schema)
     avgdl = sum_dl / n_docs
     hits = spark.read.parquet(f"{path}/postings").filter(
         F.col("term").isin(qt)

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import MINHASH_A, MINHASH_B, MINHASH_PRIME
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_relation
 from . import QueryRegistry
 from .relational import cents
 
@@ -210,17 +210,10 @@ def orders_by_period_rangejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.intervaljoin import overlap_join
 
     orders = load_table(spark, sf_dir, "orders")
-    # pandas-backed (Arrow) literal relations: the tuple-list path is
-    # Python-RDD-backed and re-pays a Python-worker round per broadcast
-    # build (round-12 sentinel finding)
-    import pandas as _pd
-
-    periods = spark.createDataFrame(
-        _pd.DataFrame(
-            list(_QUARTERS),
-            columns=["period_name", "period_start", "period_end"],
-        ),
-        schema="period_name string, period_start string, period_end string",
+    periods = local_relation(
+        spark,
+        _QUARTERS,
+        "period_name string, period_start string, period_end string",
     ).select(
         "period_name",
         F.col("period_start").cast("timestamp").alias("period_start"),
@@ -246,11 +239,8 @@ def orders_by_period_rangejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifespans = orders.groupBy("o_custkey").agg(
         F.min(day).alias("ls"), (F.max(day) + 1).alias("le")
     )
-    quarter_days = spark.createDataFrame(
-        _pd.DataFrame(
-            list(_QUARTER_DAYS), columns=["period_name", "ps", "pe"]
-        ),
-        "period_name string, ps long, pe long",
+    quarter_days = local_relation(
+        spark, _QUARTER_DAYS, "period_name string, ps long, pe long"
     )
     active_rows = (
         overlap_join(
@@ -431,7 +421,7 @@ def expression_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental — and point estimates for two present values and one
     absent value, all mirrored in the oracle via the cross-engine md5
     hash family of operators/cms.py)."""
-    df = spark.createDataFrame(_EXPR_ROWS, schema="id int, a int, b int")
+    df = local_relation(spark, _EXPR_ROWS, "id int, a int, b int")
     a, b = F.col("a"), F.col("b")
     cond = df.select(
         "id",

@@ -43,7 +43,7 @@ from ..operators.sharding import (
     md5_epoch_hash,
     pack_training_sequences,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_relation
 from . import QueryRegistry
 
 REGISTRY = QueryRegistry()
@@ -512,10 +512,9 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with 0, which keeps the semantics exact: an lm gram landing on an
     # index-only entry reads __mcnt 0 (identical to no match, which is
     # coalesced to 0); a dec gram landing on a model-only entry adds
-    # __hit 0 to a sum whose no-match NULLs are coalesced to 0 too.
-    # Plain numpy integer columns keep the relation independent of the
-    # session's Arrow conf: nullable Int64/Int32 reach the non-Arrow
-    # createDataFrame path as float values its LongType check rejects.
+    # __hit 0 to a sum whose no-match NULLs are coalesced to 0 too. The
+    # integer cast matters: the outer merge leaves float columns, and a
+    # float is not a value of a long column.
     mi_pdf = (
         mdl_pdf.rename(columns={"gram": "__mg", "mcnt": "__mcnt"})
         .merge(
@@ -524,10 +523,16 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .fillna({"__mcnt": 0, "__hit": 0})
         .astype({"__mcnt": "int64", "__hit": "int32"})
     )
-    mi_df = spark.createDataFrame(
-        mi_pdf, "__mg string, __mcnt long, __hit int"
+    mi_df = local_relation(
+        spark,
+        mi_pdf.itertuples(index=False),
+        "__mg string, __mcnt long, __hit int",
     )
-    ctx_df = spark.createDataFrame(ctx_pdf, "__ctx string, __ctx_cnt long")
+    ctx_df = local_relation(
+        spark,
+        ctx_pdf.itertuples(index=False),
+        "__ctx string, __ctx_cnt long",
+    )
     enriched = exploded.join(
         F.broadcast(mi_df),
         ((F.col("fam") == "lm") | (F.col("fam") == "dec"))
@@ -948,7 +953,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     merges = train_bpe(docs, n_merges=_BPE_MERGES)
-    rules = spark.createDataFrame(
+    rules = local_relation(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, left_sym string, right_sym string",
     )

@@ -63,7 +63,7 @@ from ..operators.nndescent import (
     knn_graph_cte_parts,
 )
 from ..operators.pagerank import pagerank_fixedpoint_cte_parts
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_relation
 from . import QueryRegistry
 
 REGISTRY = QueryRegistry()
@@ -1226,18 +1226,9 @@ def neardup_doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sem_vecs = emb.unionByName(_nudged(5, 1000000, 0.1)).unionByName(
         _nudged(10, 2000000, 0.2)
     )
-    # pandas-backed (Arrow) literal relation: the tuple-list path is a
-    # Python-RDD-backed relation whose semdedup-side collect() pays a
-    # Python-worker round per evaluation (round-12 sentinel finding)
-    import pandas as _pd
-
-    cent_df = spark.createDataFrame(
-        _pd.DataFrame(
-            {
-                "cell": [j + 1 for j in range(len(_SEM_CENTROIDS))],
-                "centroid": [list(c) for c in _SEM_CENTROIDS],
-            }
-        ),
+    cent_df = local_relation(
+        spark,
+        enumerate(_SEM_CENTROIDS, start=1),
         "cell int, centroid array<double>",
     )
     sem = semantic_dedup(

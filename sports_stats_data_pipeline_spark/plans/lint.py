@@ -6,6 +6,8 @@ instead of eyeballing ``.explain()`` output:
 - did the small side BROADCAST (or did a 2 MB dim trigger a shuffle)?
 - how many Exchanges (shuffles) does the plan pay?
 - does a supposedly map-only operator really avoid Exchange?
+- does a relation built from driver-side Python rows leave a Python-RDD
+  leaf behind (see ``sources.tables.local_relation``)?
 
 Use in tests to pin a plan shape (several of this repo's test suites
 do), or interactively while tuning: every check returns data, the
@@ -62,6 +64,16 @@ def read_schemas(df: DataFrame) -> list[str]:
     """Every scan's ``ReadSchema`` struct string — audit column pruning
     (a 2-column projection reading a 16-column struct is a bug)."""
     return re.findall(r"ReadSchema: (struct<[^\n]*>)", plan_text(df))
+
+
+def python_rdd_leaves(df: DataFrame) -> list[str]:
+    """The ``Arguments`` of every ``Scan ExistingRDD`` leaf built from
+    driver-side Python data (``createDataFrame``, ``rdd.toDF()``; see
+    ``sources.tables.local_relation``). Checkpoint leaves are skipped."""
+    args = re.findall(
+        r"\(\d+\) Scan ExistingRDD.*?\nArguments: ([^\n]*)", plan_text(df), re.S
+    )
+    return [a for a in args if "checkpoint" not in a.lower()]
 
 
 def assert_no_shuffle(df: DataFrame) -> None:

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_relation
 from . import QueryRegistry
 
 REGISTRY = QueryRegistry()
@@ -458,36 +458,11 @@ def _quality_family_relations(
             .alias("o_totalprice"),
         )
         .unionByName(
-            # pure-JVM literal rows (explode over range(1)), NOT
-            # createDataFrame([rows]): a Python-list DataFrame is a
-            # Python-RDD-backed relation re-paying a Python-worker
-            # round per slice on EVERY evaluation (the round-12
-            # streaming-sentinel finding; this one sat inside the
-            # reconcile family's full-outer join).
-            spark.range(1)
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(10_000_001).cast("long"),
-                            F.lit(1).cast("long"),
-                            F.lit("O"),
-                            F.lit(1.0),
-                        ),
-                        F.struct(
-                            F.lit(10_000_002).cast("long"),
-                            F.lit(2).cast("long"),
-                            F.lit("F"),
-                            F.lit(2.0),
-                        ),
-                    )
-                ).alias("r")
-            )
-            .select(
-                F.col("r.col1").alias("o_orderkey"),
-                F.col("r.col2").alias("o_custkey"),
-                F.col("r.col3").alias("o_orderstatus"),
-                F.col("r.col4").alias("o_totalprice"),
+            local_relation(
+                spark,
+                [(10_000_001, 1, "O", 1.0), (10_000_002, 2, "F", 2.0)],
+                "o_orderkey long, o_custkey long, o_orderstatus string, "
+                "o_totalprice double",
             )
         )
     )

@@ -2,7 +2,7 @@
 
 The driver corpus has no fighter/fight tables, so these queries carry
 their own inputs: a literal VALUES relation, identical on the Spark side
-(``spark.createDataFrame``) and in the DuckDB oracle (``FROM (VALUES
+(``sources.tables.local_relation``) and in the DuckDB oracle (``FROM (VALUES
 ...)``). The callable ignores ``sf_dir``. Inputs cover the edge cases
 catalogued in FIXTURES.md §A4: two-part records, ``N/A`` sentinels, empty
 strings, garbage dates, malformed ``M:SS`` strings.
@@ -30,6 +30,7 @@ from ..functions.parsing import (
     parse_weight_kg,
 )
 from ..operators.merge import first_wins_dedup
+from ..sources.tables import local_relation
 from . import QueryRegistry
 
 REGISTRY = QueryRegistry()
@@ -172,9 +173,10 @@ _PAD_STR = "CAST(NULL AS VARCHAR)"
     ),
 )
 def ref_parse_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fighter_df = spark.createDataFrame(
+    fighter_df = local_relation(
+        spark,
         _FIGHTER_ROWS,
-        schema="id int, record string, height string, weight string, "
+        "id int, record string, height string, weight string, "
         "reach string, pct string",
     )
     wins, losses, draws = parse_record(F.col("record"))
@@ -190,8 +192,8 @@ def ref_parse_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_pct(F.col("pct")).alias("str_acc"),
     )
 
-    date_df = spark.createDataFrame(
-        _DATE_ROWS, schema="id int, dob string, last_fight string"
+    date_df = local_relation(
+        spark, _DATE_ROWS, "id int, dob string, last_fight string"
     )
     last = parse_ref_date(F.col("last_fight"))
     dates = date_df.select(
@@ -202,9 +204,10 @@ def ref_parse_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         activity_flag(last, AS_OF).alias("active_status"),
     )
 
-    fight_df = spark.createDataFrame(
+    fight_df = local_relation(
+        spark,
         _FIGHT_ROWS,
-        schema="id int, sig_str string, ctrl string, time_format string, "
+        "id int, sig_str string, ctrl string, time_format string, "
         "label string",
     )
     landed, attempted = parse_of_pair(F.col("sig_str"))
@@ -485,12 +488,13 @@ def ref_gold_name_resolution_join(spark: SparkSession, sf_dir: str) -> DataFrame
     fixture row the exact join drops."""
     from ..operators.fuzzy import fuzzy_join
 
-    fighters = spark.createDataFrame(
-        _GOLD_FIGHTERS, schema="name string, wins int, losses int"
+    fighters = local_relation(
+        spark, _GOLD_FIGHTERS, "name string, wins int, losses int"
     )
-    fights = spark.createDataFrame(
+    fights = local_relation(
+        spark,
         _GOLD_FIGHTS,
-        schema="fight_id int, fighter_a string, fighter_b string, method string",
+        "fight_id int, fighter_a string, fighter_b string, method string",
     )
     fa = fighters.select(
         F.col("name").alias("fa_name"), F.col("wins").alias("a_wins")
@@ -598,9 +602,10 @@ _SILVER_VALUES = ", ".join(
 def ref_silver_fighters_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..transforms.silver import fighters_silver
 
-    bronze = spark.createDataFrame(
+    bronze = local_relation(
+        spark,
         _SILVER_BRONZE_ROWS,
-        schema=(
+        (
             "Name string, Nickname string, Record string, Height string, "
             "Weight string, Reach string, STANCE string, DOB string, "
             "SLpM string, `Str. Acc.` string, SApM string, `Str. Def` string, "
@@ -662,8 +667,8 @@ _FIGHT_DATE_VALUES = ", ".join(
     """.format(values=_FIGHT_DATE_VALUES),
 )
 def ref_fight_dates_explode_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame(
-        _FIGHT_DATE_ROWS, schema="url string, fight_dates string"
+    df = local_relation(
+        spark, _FIGHT_DATE_ROWS, "url string, fight_dates string"
     )
     exploded = df.select(
         "url", F.explode(F.split("fight_dates", r"\|")).alias("d")
@@ -697,7 +702,7 @@ _MERGE_VALUES = ", ".join(f"('{r[0]}', {r[1]}, '{r[2]}')" for r in _MERGE_ROWS)
     """.format(values=_MERGE_VALUES),
 )
 def ref_first_wins_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame(
-        _MERGE_ROWS, schema="url string, batch_seq int, name string"
+    df = local_relation(
+        spark, _MERGE_ROWS, "url string, batch_seq int, name string"
     )
     return first_wins_dedup(df, keys=["url"], order_by=["batch_seq"])

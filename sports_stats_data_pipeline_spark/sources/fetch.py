@@ -106,10 +106,9 @@ def url_relation(
     spreads over every fetch stream.
 
     The list crosses py4j as ONE string literal that the optimizer
-    constant-folds into an array, indexed by a ``range`` — not a
-    ``createDataFrame`` of a Python list, whose Python-RDD leaf pays a
-    Python-worker round per slice on every evaluation. ``range`` slices
-    also give the fetch stage its parallelism without a shuffle.
+    constant-folds into an array, indexed by a ``range`` whose slices
+    give the fetch stage its parallelism without a shuffle (unlike the
+    one-partition ``sources.tables.local_relation``).
     """
     from pyspark.sql import functions as F
 

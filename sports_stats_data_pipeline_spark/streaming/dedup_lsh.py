@@ -43,6 +43,7 @@ from ..functions.text import (
     shingles,
 )
 from ..operators.sinks import append_staging, recover_sink
+from ..sources.tables import local_relation
 
 #: bucket cap mirrored from the batch operator — a super-bucket in the
 #: index is skipped, not joined (bounded-recall contract, skew guard).
@@ -260,7 +261,8 @@ def run_streaming_neardup_dedup(
     q.awaitTermination()
     if not os.path.exists(store_path):
         # zero batches landed: an empty corpus, not a read error.
-        return spark.createDataFrame(
+        return local_relation(
+            spark,
             [],
             f"{doc_schema}, shingles array<string>, bands array<string>",
         )

@@ -44,40 +44,13 @@ the corresponding batch join in tests — the batch twin is the oracle.
 
 from __future__ import annotations
 
-import datetime
-import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import EVENTS_RAW_SCHEMA, stage_parquet
-
-
-def _stage_with_typed_flush(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the events file plus one far-future click AND purchase
-    sentinel (see module docstring for why the untyped ``__flush__``
-    row cannot advance a stream-stream join's watermark)."""
-    staging = tempfile.mkdtemp(prefix="events_join_flush_")
-    stage_parquet(os.path.join(sf_dir, "events.parquet"), staging)
-    flush_ts = datetime.datetime(2100, 1, 1)
-    # range+literals, not createDataFrame([rows]).coalesce(1) — the
-    # latter serialized 32 Python-worker slice evaluations into one
-    # task (~4 s for two rows; streaming/pipeline.py has the full note)
-    spark.range(2).select(
-        (-F.col("id") - 1).cast("long").alias("event_id"),
-        F.lit(flush_ts).alias("ts"),
-        (-F.col("id") - 1).cast("long").alias("user_id"),
-        F.when(F.col("id") == 0, F.lit("click"))
-        .otherwise(F.lit("purchase"))
-        .alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit("{}").alias("props"),
-    ).write.mode("overwrite").parquet(
-        os.path.join(staging, "flush.parquet")
-    )
-    return staging
+from ..sources.tables import ensure_session_confs, load_table
+from .pipeline import EVENTS_RAW_SCHEMA, _stage_with_flush
 
 
 def _sides(stream: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -111,10 +84,10 @@ def purchase_click_pairs_stream(
 
     Output: (purchase_id, user_id, purchase_ts, click_id, gap_s).
     """
-    from ..sources.tables import ensure_session_confs
-
     ensure_session_confs(spark)
-    staging = _stage_with_typed_flush(spark, sf_dir)
+    # a far-future click AND purchase sentinel (module docstring: the
+    # untyped flush row cannot advance a stream-stream join's watermark)
+    staging = _stage_with_flush(spark, sf_dir, ("click", "purchase"))
     stream = (
         spark.readStream.schema(EVENTS_RAW_SCHEMA)
         .format("parquet")
@@ -176,8 +149,6 @@ def purchase_click_pairs_batch(
 ) -> DataFrame:
     """Batch twin of :func:`purchase_click_pairs_stream` — the oracle
     the streaming output must equal exactly."""
-    from ..sources.tables import load_table
-
     events = load_table(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),

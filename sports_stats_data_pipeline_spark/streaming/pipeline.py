@@ -36,6 +36,7 @@ from ..operators.sinks import (  # noqa: F401
     recover_sink,
 )
 from ..plans.relational import cents
+from ..sources.tables import ensure_session_confs, local_relation
 
 #: events schema for the file-stream source. Declaring ``ts timestamp``
 #: (LTZ) makes the parquet reader hand back epoch micros directly for
@@ -53,8 +54,6 @@ EVENTS_RAW_SCHEMA = (
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over the events parquet (same ts semantics as
     the batch loader)."""
-    from ..sources.tables import ensure_session_confs
-
     ensure_session_confs(spark)
     # file-stream sources take a directory; select the one table's file
     # with a glob filter (a live deployment would point at a landing dir).
@@ -98,40 +97,31 @@ def stage_parquet(src: str, staging: str) -> None:
         shutil.copy(src, os.path.join(staging, os.path.basename(src)))
 
 
-def _stage_with_flush(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the events file plus one far-future sentinel event.
+def _stage_with_flush(
+    spark: SparkSession, sf_dir: str, event_types: tuple = (_FLUSH_TYPE,)
+) -> str:
+    """Stage the events file plus one far-future sentinel event per
+    entry of ``event_types`` (event and user ids -1, -2, ...).
 
     The sentinel drives the terminal watermark past every real window so
     append-mode output is complete (a live deployment posts the flush
     message to the real source — Kafka topic, landing dir — instead of
     staging files).
     """
-    import shutil
+    import datetime
     import tempfile
 
     staging = tempfile.mkdtemp(prefix="events_flush_")
     stage_parquet(os.path.join(sf_dir, "events.parquet"), staging)
     # 2100-01-01 — beyond any corpus event time. Naive datetime into an
-    # LTZ column = wall clock in the session TZ (pinned UTC).
-    # Built from spark.range(1) + literals, NOT createDataFrame([row]):
-    # a Python-list DataFrame is a Python-RDD-backed relation sliced
-    # over defaultParallelism, and the former coalesce(1) evaluated all
-    # 32 slices' Python-worker rounds SEQUENTIALLY in one task —
-    # measured 4 s for this one-row file vs ~0.2 s pure-JVM (the single
-    # range partition also writes the single file the old coalesce
-    # bought). Round-12 finding; same fix in streaming/join.py and
-    # streaming/quality.py.
-    import datetime
-
-    flush_ts = datetime.datetime(2100, 1, 1)
-    spark.range(1).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        F.lit(flush_ts).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit(_FLUSH_TYPE).alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit("{}").alias("props"),
-    ).write.mode("overwrite").parquet(os.path.join(staging, "flush.parquet"))
+    # LTZ column = wall clock in the session TZ (pinned UTC); the local
+    # relation is one partition, so this writes one file.
+    ts = datetime.datetime(2100, 1, 1)
+    rows = [(-i, ts, -i, t, 0.0, "{}") for i, t in enumerate(event_types, 1)]
+    flush = local_relation(spark, rows, EVENTS_RAW_SCHEMA)
+    flush.write.mode("overwrite").parquet(
+        os.path.join(staging, "flush.parquet")
+    )
     return staging
 
 
@@ -141,8 +131,6 @@ def _flushed_events_stream(
     """Watermarked file-stream over the staged events+flush directory;
     returns (stream, staging_dir) — the caller removes the staging dir
     once the stream has run (it holds a full copy of the events file)."""
-    from ..sources.tables import ensure_session_confs
-
     ensure_session_confs(spark)
     staging = _stage_with_flush(spark, sf_dir)
     stream = (

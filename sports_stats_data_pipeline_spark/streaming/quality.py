@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.lm import CharLM, score_perplexity, train_char_lm
+from ..sources.tables import load_table, local_relation
 
 __all__ = [
     "save_char_lm",
@@ -46,13 +47,10 @@ def save_char_lm(lm: CharLM, path: str) -> None:
         os.path.join(path, "contexts")
     )
     spark = lm.grams.sparkSession
-    # range+literals, not createDataFrame([row]).coalesce(1) — the
-    # latter serialized 32 Python-worker slice evaluations into one
-    # task (~4 s per call; streaming/pipeline.py has the full note)
-    spark.range(1).select(
-        F.lit(lm.n).cast("int").alias("n"),
-        F.lit(lm.add_k).cast("double").alias("add_k"),
-        F.lit(lm.vocab_size).cast("int").alias("vocab_size"),
+    local_relation(
+        spark,
+        [(lm.n, lm.add_k, lm.vocab_size)],
+        "n int, add_k double, vocab_size int",
     ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
 
 
@@ -153,9 +151,6 @@ def streaming_quality_scores_table(
     oracle possible for a streaming run."""
     import shutil
     import tempfile
-
-    from ..operators.lm import train_char_lm
-    from ..sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"

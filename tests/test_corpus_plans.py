@@ -4,8 +4,10 @@ would stay silent if both engines drifted together."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from sports_stats_data_pipeline_spark.plans import all_registries
 from sports_stats_data_pipeline_spark.plans.corpus import (
     _SHARD_BUDGET,
     corpus_mix_split_shards,
@@ -152,18 +154,35 @@ def test_top_bigram_run_scan_matches_two_level_aggregate(spark):
     assert got == want
 
 
-def test_quality_filter_same_rows_with_arrow_off(spark):
-    """The slot must not depend on the session's Arrow conf: the model +
-    index broadcast relation is built from pandas, and the non-Arrow
-    createDataFrame path type-checks every value row by row."""
+#: queries whose local relations come from driver-side Python rows
+#: (sources.tables.local_relation), cheap enough to run twice here
+_ARROW_CANARIES = (
+    "corpus_quality_filter",
+    "ref_parse_functions",
+    "ref_gold_name_resolution_join",
+    "ref_silver_fighters_transform",
+    "ref_fight_dates_explode_max",
+    "ref_first_wins_dedup",
+    "orders_by_period_rangejoin",
+    "expression_profile_orders",
+)
+
+
+@pytest.mark.parametrize("name", _ARROW_CANARIES)
+def test_quality_filter_same_rows_with_arrow_off(spark, name):
+    """No query may depend on the session's Arrow conf: a pandas-built
+    broadcast relation once crashed a vanilla (Arrow-off) session,
+    because the non-Arrow createDataFrame path checks rows one by one."""
+    query = all_registries().queries[name]
     key = "spark.sql.execution.arrow.pyspark.enabled"
     old = spark.conf.get(key)
     try:
         spark.conf.set(key, "true")
-        on = corpus_quality_filter(spark, SF).collect()
+        on = query(spark, SF).collect()
         spark.conf.set(key, "false")
-        off = corpus_quality_filter(spark, SF).collect()
+        off = query(spark, SF).collect()
     finally:
         spark.conf.set(key, old)
-    assert len(on) == 500
-    assert sorted(map(tuple, off)) == sorted(map(tuple, on))
+    if name == "corpus_quality_filter":
+        assert len(on) == 500
+    assert sorted(map(repr, off)) == sorted(map(repr, on))

@@ -8,6 +8,7 @@ import random
 
 import pytest
 
+from sports_stats_data_pipeline_spark.plans.lint import python_rdd_leaves
 from sports_stats_data_pipeline_spark.sources.fetch import (
     FetchConfig,
     safe_fetch,
@@ -451,7 +452,10 @@ def test_ingest_plan_one_python_crossing_with_arrow_on_and_off(
     def capturing_parquet(self, path, *args, **kwargs):
         if path.endswith(".staging"):
             plans.append(
-                self._df._jdf.queryExecution().executedPlan().toString()
+                (
+                    self._df._jdf.queryExecution().executedPlan().toString(),
+                    python_rdd_leaves(self._df),
+                )
             )
         return real_parquet(self, path, *args, **kwargs)
 
@@ -469,9 +473,9 @@ def test_ingest_plan_one_python_crossing_with_arrow_on_and_off(
     finally:
         spark.conf.set(conf, prior)
     assert len(plans) == 4  # cold + delta, Arrow on and off
-    for plan in plans:
+    for plan, leaves in plans:
         assert plan.count("MapInPandas") == 1, plan
-        assert "ExistingRDD" not in plan, plan
+        assert leaves == [], plan
         assert "Range" in plan, plan
     assert rows["true"] == rows["false"]
     assert len(rows["true"]) == 11

@@ -1,5 +1,6 @@
 """Differential test: every registered query vs its DuckDB oracle —
-the same check the driver runs (at sf0.01) for CORRECTNESS_r{N}.json.
+the same check the driver runs (at sf0.01) for CORRECTNESS_r{N}.json —
+plus a plan check that no query carries a Python-RDD leaf.
 
 Default scale here is sf0.001 for speed; set
 ``SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01`` to mirror the driver.
@@ -13,6 +14,7 @@ import duckdb
 import pytest
 
 from sports_stats_data_pipeline_spark.plans import all_registries
+from sports_stats_data_pipeline_spark.plans.lint import python_rdd_leaves
 from sports_stats_data_pipeline_spark.sources.tables import TABLE_NAMES
 
 from ._compare import assert_frames_match
@@ -76,6 +78,10 @@ def test_sketches_exact_in_documented_regime(spark):
 
 @pytest.mark.parametrize("name", sorted(REG.oracles))
 def test_oracle_parity(spark, oracle, name):
-    spark_pdf = REG.queries[name](spark, SF_DIR).toPandas()
+    df = REG.queries[name](spark, SF_DIR)
+    # local rows enter through sources.tables.local_relation, never a
+    # Python-RDD leaf (one explain, no Spark job)
+    assert python_rdd_leaves(df) == [], name
+    spark_pdf = df.toPandas()
     oracle_pdf = oracle.execute(REG.oracles[name]).df()
     assert_frames_match(spark_pdf, oracle_pdf, name)

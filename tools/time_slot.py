@@ -1,7 +1,7 @@
-"""Per-slot A/B timing harness for optimization work: reproduces
-bench.py's methodology (same session factory, untimed warmup, min-of-N
-noop-sink timed passes, per-pass job/stage counts from the pass whose
-wall is the min) for a named subset of slots, so a single change can be
+"""Per-slot A/B timing harness for optimization work: runs bench.py's
+own ``_time_slot`` (same session factory, untimed warmup, min-of-N
+noop-sink timed passes, job/stage counts from the pass whose wall is
+the min) for a named subset of slots, so a single change can be
 measured in ~seconds instead of a full bench run.
 
     python tools/time_slot.py <slot> [<slot> ...] [--passes N]
@@ -15,11 +15,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+import uuid
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import _time_slot  # noqa: E402
 from sports_stats_data_pipeline_spark.plans import all_registries  # noqa: E402
 from sports_stats_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -36,39 +37,18 @@ def main() -> None:
     spark = get_spark("time_slot")
     spark.sparkContext.setLogLevel("ERROR")
     reg = all_registries()
-    tracker = spark.sparkContext.statusTracker()
+    run_id = uuid.uuid4().hex[:8]
     out = {}
     for name in names:
-        fn = reg.queries[name]
-        # untimed warmup (bench methodology)
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        best, best_jobs, best_stages = float("inf"), None, None
-        walls = []
-        for i in range(passes):
-            grp = f"ts_{name}_{i}"
-            spark.sparkContext.setJobGroup(grp, name)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            walls.append(round(wall, 3))
-            if wall < best:
-                best = wall
-                job_ids = tracker.getJobIdsForGroup(grp)
-                best_jobs = len(job_ids)
-                # bind each job info once: a job info expiring between
-                # a guard call and a .stageIds call would raise on None
-                infos = [tracker.getJobInfo(j) for j in job_ids]
-                best_stages = sum(
-                    len(i.stageIds) for i in infos if i is not None
-                )
-            spark.sparkContext.setJobGroup("ts_idle", "between passes")
-            spark.catalog.clearCache()
+        best, jobs, stages, _, _, walls = _time_slot(
+            spark, reg, sf_dir, name,
+            passes=passes, warmup=True, run_id=run_id, tier="ts",
+        )
         out[name] = {
-            "min_wall": round(best, 3),
+            "min_wall": best,
             "walls": walls,
-            "jobs": best_jobs,
-            "stages": best_stages,
+            "jobs": jobs,
+            "stages": stages,
         }
         print(json.dumps({name: out[name]}), flush=True)
     print("RESULT " + json.dumps(out))
