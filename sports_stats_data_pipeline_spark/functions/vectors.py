@@ -45,44 +45,3 @@ def cosine(a: Column, b: Column) -> Column:
     value an exact-duplicate pair could sit on (1.0 itself) — every
     registered query follows both rules."""
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_normalize(a: Column) -> Column:
-    """Unit-norm copy of ``a`` (zero vectors pass through unchanged —
-    dividing by a zero norm would poison downstream cosines with NaN)."""
-    n = norm(a)
-    return F.when(
-        n == 0, a
-    ).otherwise(F.transform(a, lambda x: x / n))
-
-
-def mean_pool(
-    df,
-    group_cols: list[str],
-    vec_col: str = "embedding",
-    out_col: str = "pooled",
-):
-    """Mean-pool each group's vectors into one embedding — the standard
-    chunk-embeddings → document-embedding reduction.
-
-    Scale shape: ``collect_list`` of whole vectors per group would build
-    one giant array on a single reducer for a hot group; instead
-    ``posexplode`` turns vectors into (group, pos, value) rows, a plain
-    ``avg`` aggregates by (group, pos) — map-side-combinable, skew
-    bounded by dim × group count, not group size — and the per-group
-    vector re-assembles from exactly ``dim`` elements (bounded by the
-    embedding dimension, never by how many vectors the group holds).
-    Returns one row per group: group_cols + ``out_col`` array<double>.
-    """
-    exploded = df.select(
-        *group_cols, F.posexplode(as_double(F.col(vec_col)))
-    )
-    by_pos = exploded.groupBy(*group_cols, "pos").agg(
-        F.avg("col").alias("v")
-    )
-    return by_pos.groupBy(*group_cols).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "v"))),
-            lambda s: s["v"],
-        ).alias(out_col)
-    )

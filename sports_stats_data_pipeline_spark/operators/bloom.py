@@ -10,8 +10,8 @@ sink's keys inverts the cost: probe is a join against a tiny bitmap
 relation, *"definitely new"* rows skip the exact join entirely, and only
 the *"maybe present"* sliver (true duplicates + the controlled
 false-positive fraction) pays the exact anti-join. With an append-only
-sink the filter is itself incremental — union the new keys' bits in and
-re-persist (:func:`merge_blooms`), so successive runs never rescan the
+sink the filter can itself be incremental — OR the new keys' bits into
+the persisted bitmap and re-persist, so successive runs never rescan the
 sink.
 
 Spark's AQE injects runtime bloom filters *within* one query
@@ -32,8 +32,6 @@ that shard's bitmap. A single-row filter (``shards=1``) caps out around
 past sane broadcast sizes); sharding bounds every row to
 ``m_bits/shards/8`` bytes, so 10¹⁰–10¹¹ keys are reachable with
 ``shards`` in the hundreds while each row stays a few MB.
-:func:`shards_for` picks the smallest power-of-two shard count that
-keeps rows under a byte budget.
 
 Build is one explode + ``bit_or`` hash aggregate keyed on
 ``(shard, word)``; probe equi-joins on the shard id (broadcast by
@@ -62,10 +60,8 @@ from pyspark.sql import functions as F
 __all__ = [
     "build_bloom",
     "probe_bloom",
-    "merge_blooms",
     "insert_if_absent_bloom",
     "optimal_params",
-    "shards_for",
 ]
 
 _META = ["__bloom_shard", "__bloom_m", "__bloom_k", "__bloom_shards"]
@@ -81,16 +77,6 @@ def optimal_params(n_keys: int, fp_rate: float = 0.01) -> tuple[int, int]:
     m = ((m + 63) // 64) * 64
     k = max(1, round((m / n) * math.log(2)))
     return m, k
-
-
-def shards_for(m_bits: int, max_shard_bytes: int = 8 << 20) -> int:
-    """Smallest power-of-two shard count keeping each shard's bitmap
-    under ``max_shard_bytes`` (default 8 MB — comfortably below row and
-    broadcast ceilings even with thousands of shards in flight)."""
-    shards = 1
-    while m_bits // shards > max_shard_bytes * 8:
-        shards *= 2
-    return shards
 
 
 def _shard_of(key: Column, shards: Column) -> Column:
@@ -223,50 +209,6 @@ def probe_bloom(
     for c in checks[1:]:
         hit = hit & c
     return probed.withColumn(flag_col, hit).drop(*_COLS)
-
-
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR two same-shaped filters (the append-only sink's incremental
-    update: ``bloom(sink ∪ batch) == merge(bloom(sink), bloom(batch))``
-    — exactly, since build is a pure bitwise OR of per-key patterns).
-
-    Full outer join on the shard id: a shard present on one side only
-    passes through unchanged (the other side simply inserted no key
-    there)."""
-    pa = a.select("__bloom_m", "__bloom_k", "__bloom_shards").first()
-    pb = b.select("__bloom_m", "__bloom_k", "__bloom_shards").first()
-    if pa is not None and pb is not None and tuple(pa) != tuple(pb):
-        raise ValueError("merge_blooms: filters have different m_bits/k/shards")
-    left = a.select(
-        "__bloom_shard",
-        F.col("__bloom_m").alias("ma"),
-        F.col("__bloom_k").alias("ka"),
-        F.col("__bloom_shards").alias("sa"),
-        F.col("__bloom_words").alias("wa"),
-        F.col("__bloom_bits").alias("bits_a"),
-    )
-    right = b.select(
-        "__bloom_shard",
-        F.col("__bloom_m").alias("mb"),
-        F.col("__bloom_k").alias("kb"),
-        F.col("__bloom_shards").alias("sb"),
-        F.col("__bloom_words").alias("wb"),
-        F.col("__bloom_bits").alias("bits_b"),
-    )
-    joined = left.join(right, "__bloom_shard", "full_outer")
-    return joined.select(
-        "__bloom_shard",
-        F.coalesce("ma", "mb").alias("__bloom_m"),
-        F.coalesce("ka", "kb").alias("__bloom_k"),
-        F.coalesce("sa", "sb").alias("__bloom_shards"),
-        F.coalesce("wa", "wb").alias("__bloom_words"),
-        F.when(
-            F.col("bits_a").isNotNull() & F.col("bits_b").isNotNull(),
-            F.zip_with("bits_a", "bits_b", lambda x, y: x.bitwiseOR(y)),
-        )
-        .otherwise(F.coalesce("bits_a", "bits_b"))
-        .alias("__bloom_bits"),
-    )
 
 
 def insert_if_absent_bloom(

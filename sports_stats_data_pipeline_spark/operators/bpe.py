@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 
-__all__ = ["train_bpe", "encode_words", "encode_words_pandas"]
+__all__ = ["train_bpe", "encode_words"]
 
 
 def _adjacent_pairs(syms: Column) -> Column:
@@ -132,100 +132,3 @@ def encode_words(
         if (i + 1) % checkpoint_every == 0:
             out = out.localCheckpoint(eager=True)
     return out
-
-
-def encode_words_pandas(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    word_col: str = "word",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """:func:`encode_words` for PRODUCTION-SIZE merge tables.
-
-    The expression-fold encoder builds one Catalyst transform per merge
-    — elegant and fully codegen'd at the tens of merges the driver
-    oracle unrolls, but a real tokenizer carries 30k-50k merges and
-    50k chained column transforms is not a plan Catalyst can hold.
-    This variant ships the merge RANK table to executors once (task
-    broadcast via closure — a dict of pairs, a few MB at vocab scale)
-    and applies the standard rank-greedy BPE loop per DISTINCT word in
-    Arrow batches, with a per-task word cache so repeated words cost a
-    dict hit (Zipf makes that the common case).
-
-    Exactly equivalent to :func:`encode_words` BY CONSTRUCTION: both
-    replay merges in strictly increasing rank order, one left-to-right
-    non-overlapping pass per merge, never revisiting an earlier rank.
-    (A plain rank-greedy-with-restart loop — re-scan for the global
-    min-rank pair after every merge — is NOT equivalent when a later
-    merge recreates an earlier-rank pair, which can happen when two
-    distinct rules produce the same token string, e.g. ('a','bc') and
-    ('ab','c'); the rank floor below removes that divergence.) The
-    skip-ahead is still O(present pairs), not O(len(merges)), per word:
-    ranks in [floor, best) are provably absent when best is the minimum
-    present rank, so skipping them matches sequential replay's no-op
-    passes. Pinned in tests/test_bpe.py.
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} array<string>"
-
-    def encode_one(word: str) -> list[str]:
-        syms = list(word)
-        floor = 0  # never re-apply a rank sequential replay has passed
-        while len(syms) > 1:
-            # best-ranked adjacent pair not yet replayed
-            best = None
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]))
-                if r is not None and r >= floor and (
-                    best is None or r < best[0]
-                ):
-                    best = (r, syms[i], syms[i + 1])
-            if best is None:
-                break
-            rbest, a, b = best
-            floor = rbest + 1
-            # left-to-right non-overlapping replacement of (a, b)
-            out, i = [], 0
-            while i < len(syms):
-                if (
-                    i < len(syms) - 1
-                    and syms[i] == a
-                    and syms[i + 1] == b
-                ):
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # cache is capped: Zipf keeps the hit rate high at any cap, but a
-        # distinct-heavy partition (URLs, identifiers) would otherwise
-        # grow it without bound over the task's whole input.
-        cache: dict[str, list[str]] = {}
-        for pdf in it:
-            toks: list[list[str] | None] = []
-            for w in pdf[word_col]:
-                if w is None or w != w:  # NULL word -> NULL tokens,
-                    toks.append(None)  # matching encode_words (split(NULL))
-                    continue
-                got = cache.get(w)
-                if got is None:
-                    got = encode_one(w)
-                    if len(cache) >= 1_000_000:
-                        cache.clear()
-                    cache[w] = got
-                toks.append(got)
-            pdf = pdf.copy()
-            pdf[out_col] = toks
-            yield pdf
-
-    return df.mapInPandas(run, schema)

@@ -89,7 +89,7 @@ def psi_report(
     """Per-bin PSI detail: (bin, ref_n, cur_n, ref_p, cur_p,
     psi_term). ``bounds`` defaults to the reference's min/max (one tiny
     aggregate; pass the persisted bounds to skip it). Sum ``psi_term``
-    for the scalar — or call :func:`psi`."""
+    for the scalar PSI."""
     if bounds is not None:
         lo, hi = bounds
         ref = bin_counts(reference, col, lo, hi, n_bins).withColumnRenamed(
@@ -106,8 +106,7 @@ def psi_report(
         # was the quality slot's second build-time job). The span
         # contract keeps firing BY NAME (drift_reference_span) from
         # inside the plan, per the in-plan-assert convention
-        # (plans/contracts.py); :func:`psi` translates it back to the
-        # documented ValueError. The bin arithmetic is bit-identical:
+        # (plans/contracts.py). The bin arithmetic is bit-identical:
         # same doubles, same floor, whether the bounds arrive as Python
         # floats or as columns of this aggregate.
         raw_lo = F.min(F.col(col).cast("double"))
@@ -188,27 +187,3 @@ def psi_report(
         cur_p.alias("cur_p"),
         ((cur_p - ref_p) * (F.log(cur_p) - F.log(ref_p))).alias("psi_term"),
     )
-
-
-def psi(
-    reference: DataFrame,
-    current: DataFrame,
-    col: str,
-    n_bins: int = 10,
-    bounds: tuple[float, float] | None = None,
-    epsilon: float = 1e-4,
-) -> float:
-    """Scalar PSI (see module docstring for thresholds)."""
-    try:
-        return (
-            psi_report(reference, current, col, n_bins, bounds, epsilon)
-            .agg(F.sum("psi_term"))
-            .first()[0]
-        )
-    except Exception as exc:  # translate the in-plan span contract
-        if "drift_reference_span" in str(exc):
-            raise ValueError(
-                f"reference column {col!r} has no usable span "
-                "(drift_reference_span contract fired in-plan)"
-            ) from exc
-        raise

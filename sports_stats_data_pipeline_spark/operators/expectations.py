@@ -151,7 +151,7 @@ def validate(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
     unknown = sorted({e.kind for e in expectations} - KNOWN_KINDS)
     if unknown:
         # an unrecognized kind must fail loudly — silently producing no
-        # report row would let gate() pass as if the check succeeded
+        # report row would let a caller pass as if the check succeeded
         raise ValueError(
             "unrecognized expectation kind(s): " + ", ".join(unknown)
         )
@@ -231,18 +231,3 @@ def validate(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
     return out.withColumn(
         "passed", (F.col("violations") == 0).cast("int")
     )
-
-
-def gate(df: DataFrame, expectations: list[Expectation]) -> None:
-    """Raise ``ValueError`` listing every failed expectation (the
-    promote-blocking form — call between staging write and promote)."""
-    failed = [
-        (r["name"], r["violations"])
-        for r in validate(df, expectations).collect()
-        if r["passed"] == 0
-    ]
-    if failed:
-        raise ValueError(
-            "data-quality gate failed: "
-            + ", ".join(f"{n} ({v} violations)" for n, v in failed)
-        )

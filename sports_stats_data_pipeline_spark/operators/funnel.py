@@ -133,28 +133,3 @@ def funnel_steps(
     return matched.select(
         user_col, prefix_len.alias("max_step"), *cols
     )
-
-
-def funnel_conversion(
-    events: DataFrame,
-    steps: Sequence[str],
-    within_minutes: int = 60,
-    **kwargs,
-) -> DataFrame:
-    """Aggregate view: one row per step with the number of users who
-    reached it (``step`` is 1-based; conversion to step i+1 =
-    n_users[i+1] / n_users[i])."""
-    per_user = funnel_steps(
-        events, steps, within_minutes=within_minutes, **kwargs
-    )
-    k = len(steps)
-    step_idx = F.explode(
-        F.sequence(F.lit(1), F.lit(k))
-    ).alias("step")
-    return (
-        per_user.select("max_step", step_idx)
-        .filter(F.col("max_step") >= F.col("step"))
-        .groupBy("step")
-        .agg(F.count("*").alias("n_users"))
-        .orderBy("step")
-    )

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 #: a file under half the target size counts as "small"; compaction is
 #: recommended when more than this fraction (basis points) of a table's
-#: files are small. Shared by the directory-walk and relation variants.
+#: files are small.
 SMALL_FRACTION_GATE_BP = 2_500
 
 
@@ -78,66 +78,13 @@ def parquet_file_count(path: str) -> int:
     )
 
 
-def small_file_report(
-    path: str, *, target_bytes: int = 128 * 1024 * 1024
-) -> dict:
-    """Compaction advisor: size stats for a parquet table's data files.
-
-    The operational question behind every OPTIMIZE schedule is "has
-    this table fragmented enough to bother?" — at 100 TB, compacting on
-    a timer wastes IO rewriting healthy tables, while never compacting
-    drowns the scheduler in file-open overhead (each file is at least
-    one task and one footer read). Returns::
-
-        {"n_files", "total_bytes", "p50_bytes", "max_bytes",
-         "n_small", "small_fraction_bp", "recommend_compaction"}
-
-    where ``n_small`` counts files under half the ``target_bytes``
-    (Spark's maxPartitionBytes-shaped default, 128 MiB) and the
-    recommendation fires when more than a quarter of files are small —
-    thresholds are starting points, not laws; wire the report into the
-    same batch cadence as operators/expectations and alert on drift.
-
-    Driver-side os.walk, not a Spark job: file metadata for one table
-    is KBs. On object stores, swap in the store's list API.
-    """
-    sizes = sorted(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    if not sizes:
-        return {
-            "n_files": 0,
-            "total_bytes": 0,
-            "p50_bytes": 0,
-            "max_bytes": 0,
-            "n_small": 0,
-            "small_fraction_bp": 0,
-            "recommend_compaction": False,
-        }
-    n = len(sizes)
-    n_small = sum(1 for s in sizes if s < target_bytes // 2)
-    frac_bp = (10_000 * n_small) // n
-    return {
-        "n_files": n,
-        "total_bytes": sum(sizes),
-        "p50_bytes": sizes[(n - 1) // 2],
-        "max_bytes": sizes[-1],
-        "n_small": n_small,
-        "small_fraction_bp": frac_bp,
-        "recommend_compaction": frac_bp > SMALL_FRACTION_GATE_BP and n > 1,
-    }
-
-
 def small_file_report_df(
     files: DataFrame,
     *,
     target_bytes: int = 128 * 1024 * 1024,
     size_col: str = "bytes",
 ) -> DataFrame:
-    """:func:`small_file_report`'s decision logic over a ``(file,
+    """Small-file report: the compaction decision logic over a ``(file,
     bytes)`` RELATION instead of a local directory walk — the form the
     advisor takes at 100 TB, where the inventory is itself a table
     (S3 Inventory exports, Iceberg/Delta manifests, the snapshots
@@ -145,8 +92,8 @@ def small_file_report_df(
 
     One row: ``n_files, total_bytes, p50_bytes, max_bytes, n_small,
     small_fraction_bp, recommend_compaction`` (all BIGINT; the
-    recommendation as 0/1), bit-identical to the dict variant on the
-    same sizes. ``p50_bytes`` is the lower median (``sizes[(n-1)//2]``)
+    recommendation as 0/1). ``p50_bytes`` is the lower median
+    (``sizes[(n-1)//2]``)
     — rank-based, so it needs one sort of the INVENTORY (metadata
     scale: ~1 row per data file, KBs per million files), never of the
     data. Empty inventory -> empty relation (callers branch on it).
@@ -168,7 +115,7 @@ def small_file_report_df(
         F.col("rn") == F.floor((F.col("n") + 1) / 2)
     ).select(F.col("b").alias("p50_bytes"))
     # exact integer floor-division ((x - x%n)/n — the division is of an
-    # exact multiple), matching the dict variant's `//` bit-for-bit;
+    # exact multiple), matching Python's `//` bit-for-bit;
     # floor(double division) drifts at ulp-adjacent quotients
     bp_num = F.lit(10_000) * F.col("n_small")
     frac_bp = (

@@ -5,7 +5,7 @@ models with triplet / InfoNCE losses, where random negatives are too
 easy to carry gradient and the HARD ones (high-cosine, wrong label) do
 the work (Schroff et al., FaceNet, 2015).
 
-Built on the same scale shape as operators.similarity.ivf_topk: a
+Built on the same scale shape as operators.quantize.quantized_ivf_topk: a
 k-means coarse quantizer bounds the candidate set to the anchor's
 ``n_probe`` nearest cells, so mining cost is ~|anchors| × (corpus /
 n_cells × n_probe) instead of |anchors| × corpus. ``n_probe >= n_cells``
@@ -59,7 +59,7 @@ def mine_contrastive_pairs(
     unpersist it (the quantize.py convention: the caller owns cleanup).
     Long-lived sessions mining many times should
     ``spark.catalog.clearCache()`` between rounds, or persist the cell
-    assignment at ingest (similarity.build_ivf_index) and mine that.
+    assignment at ingest and mine that.
     """
     assigned, centroids = kmeans_fit_assign(
         embeddings,

@@ -467,7 +467,7 @@ def build_knn_graph_index(
     vec_col: str = "embedding",
 ) -> None:
     """Materialize the graph index at ``path`` — the persisted form of
-    the build, mirroring build_ivf_index / build_bm25_index:
+    the build:
 
     - ``graph/``   — ``(src, dst, sim, rank)``, hash-partitioned and
       sorted by ``src`` so a query batch's frontier join prunes row
@@ -514,8 +514,7 @@ def graph_search_indexed(
     """:func:`graph_search` served from a :func:`build_knn_graph_index`
     layout — identical output contract, no descent at query time.
     ``query_filter`` is a Column predicate over the vectors relation
-    ``(id_col, v)``, typically an id predicate (the ivf_topk_indexed
-    convention)."""
+    ``(id_col, v)``, typically an id predicate."""
     graph = spark.read.parquet(f"{path}/graph")
     stored = spark.read.parquet(f"{path}/vectors")
     # apply the filter on the documented (id_col, v) relation BEFORE

@@ -20,7 +20,7 @@ ships bad data for the gap. This module does both at once:
   ``recover_sink``, which clears any leftover staging dir — copy a
   rejected batch aside before retrying the publish if you need it.
 
-This is the write-side complement of expectations.gate(): the same
+This is the write-side complement of expectations.validate(): the same
 fail-shut contract, but the validation cost is folded into the job you
 were already paying for. Gates needing non-aggregate shapes (unique
 keys, FK probes) still belong to expectations before/after — observe

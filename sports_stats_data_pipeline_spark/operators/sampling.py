@@ -73,61 +73,6 @@ def deterministic_split(
     return df.withColumn("split", expr)
 
 
-def grouped_split(
-    df: DataFrame,
-    group_col: str,
-    fractions: dict[str, float],
-    salt: str = "",
-) -> DataFrame:
-    """Group-stratified split: hash the GROUP key instead of the row id,
-    so every member of a group (domain, source site, dedup cluster)
-    lands in the same split. This is the leakage-safe assignment for
-    corpora with correlated members — a per-row split puts one near-dup
-    twin in train and the other in test, which a random split cannot
-    detect and which inflates eval numbers.
-
-    Same contiguous-bucket semantics as :func:`deterministic_split`
-    (growth-stable, shuffle-free projection); fractions now hold over
-    groups, not rows — heavy groups skew row-level fractions, which is
-    inherent to stratification and is what :func:`split_leakage_report`
-    quantifies for the cluster-level use."""
-    return deterministic_split(df, group_col, fractions, salt=salt)
-
-
-def split_leakage_report(
-    pairs: DataFrame,
-    splits: DataFrame,
-    id_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
-    """Cross-split near-duplicate audit: join verified near-dup PAIRS
-    (e.g. plans.documents MinHash verify output) against a split
-    assignment and count pairs per (split_a, split_b) combination.
-
-    Rows off the diagonal are leakage — a near-dup twin pair straddling
-    train/test. The fix is :func:`grouped_split` keyed by the dedup
-    cluster id (operators.components), after which this report's
-    off-diagonal counts must be zero (pinned in tests).
-
-    Shape: two hash joins of the (small) pair relation against the
-    split projection, one aggregate — nothing corpus-quadratic.
-    """
-    s = splits.select(F.col(id_col), "split")
-    a = s.select(F.col(id_col).alias(a_col), F.col("split").alias("split_a"))
-    b = s.select(F.col(id_col).alias(b_col), F.col("split").alias("split_b"))
-    return (
-        pairs.select(a_col, b_col)
-        .join(a, a_col)
-        .join(b, b_col)
-        .groupBy("split_a", "split_b")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .withColumn(
-            "leaking", (F.col("split_a") != F.col("split_b")).cast("int")
-        )
-    )
-
-
 def mix_sources(
     df: DataFrame,
     id_col: str,
@@ -171,131 +116,3 @@ def mix_sources(
     return out.select(
         "*", F.explode(F.sequence(F.lit(0), F.col("__n_copies") - 1)).alias("copy")
     ).drop("__n_copies")
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_cols: list[str],
-    n_per_stratum: int,
-    id_col: str = "doc_id",
-    seed: int = 0,
-) -> DataFrame:
-    """Deterministic stratified sample: the ``n_per_stratum`` rows with
-    the smallest ``xxhash64(seed, id)`` per stratum (all rows when the
-    stratum is smaller) — eval sets and per-source spot-checks that
-    re-draw IDENTICALLY on every run, unlike ``sampleBy`` whose
-    rand()-based draw shifts with partitioning.
-
-    Shape: one window ranked by the hash within each stratum — the same
-    shuffle a groupBy on the strata costs; no second pass, no driver
-    state. The hash ranks rows independently, so appending new rows can
-    displace old sample members only by winning the hash order (the
-    bottom-k sketch property) — change a seed to draw a fresh sample.
-    """
-    if n_per_stratum < 1:
-        raise ValueError(
-            f"n_per_stratum must be >= 1, got {n_per_stratum}"
-        )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*strata_cols).orderBy(
-        F.xxhash64(F.lit(int(seed)), F.col(id_col)), F.col(id_col)
-    )
-    return (
-        df.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= n_per_stratum)
-        .drop("__rk")
-    )
-
-
-def stratified_sample_scalable(
-    df: DataFrame,
-    strata_cols: list[str],
-    n_per_stratum: int,
-    id_col: str = "doc_id",
-    seed: int = 0,
-    prefix_bits: int = 4,
-) -> DataFrame:
-    """:func:`stratified_sample` for strata too hot for one window
-    partition (the mega-domain problem in per-domain quotas).
-
-    Identical output (pinned in test_sampling), different plan: rank
-    first within (stratum, hash-prefix) — ``2^prefix_bits`` sub-
-    partitions per stratum, each ~1/2^bits of the stratum — keep each
-    sub-partition's bottom-``n_per_stratum``, then rank the survivors
-    (<= ``2^bits × n`` rows per stratum) globally within the stratum.
-    Correct because every global bottom-n row is, within its own
-    prefix, also a bottom-n row — the union of per-prefix bottom-n is
-    a superset of the global bottom-n. No single window partition ever
-    exceeds max(stratum/2^bits, 2^bits × n) rows, so one hot domain
-    can't serialize the stage.
-    """
-    if n_per_stratum < 1:
-        raise ValueError(
-            f"n_per_stratum must be >= 1, got {n_per_stratum}"
-        )
-    from pyspark.sql import Window
-
-    h = F.xxhash64(F.lit(int(seed)), F.col(id_col))
-    prefix = F.pmod(h, F.lit(2 ** prefix_bits))
-    w1 = Window.partitionBy(*strata_cols, "__pfx").orderBy(
-        F.col("__h"), F.col(id_col)
-    )
-    w2 = Window.partitionBy(*strata_cols).orderBy(
-        F.col("__h"), F.col(id_col)
-    )
-    return (
-        df.withColumn("__h", h)
-        .withColumn("__pfx", prefix)
-        .withColumn("__rk1", F.row_number().over(w1))
-        .filter(F.col("__rk1") <= n_per_stratum)
-        .withColumn("__rk2", F.row_number().over(w2))
-        .filter(F.col("__rk2") <= n_per_stratum)
-        .drop("__h", "__pfx", "__rk1", "__rk2")
-    )
-
-
-def weighted_sample(
-    df: DataFrame,
-    n: int,
-    weight_col: str,
-    id_col: str = "doc_id",
-    strata_cols: list[str] | None = None,
-    seed: int = 0,
-) -> DataFrame:
-    """Deterministic weighted sampling WITHOUT replacement
-    (Efraimidis-Spirakis A-Res): keep the ``n`` rows with the largest
-    ``u^(1/w)`` where ``u`` is a per-row uniform draw derived from
-    ``xxhash64(seed, id)`` — inclusion probability proportional to
-    weight, reproducible across runs/partitionings/retries (no
-    ``rand()``), re-drawable by seed. ``strata_cols`` draws ``n`` per
-    stratum instead of globally.
-
-    Implemented on the log scale (``ln(u)/w`` — monotone in the key,
-    numerically safe for tiny ``u`` or large ``w``); rows with
-    non-positive or NULL weight are excluded (zero-weight rows must
-    never win a slot). One window ranked by the key per stratum — the
-    stratified_sample shape; for a single giant stratum apply the
-    stratified_sample_scalable prefix-split the same way.
-    """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    from pyspark.sql import Window
-
-    # uniform in (0, 1]: 53-bit mantissa of the hash, +1 to exclude 0
-    u = (
-        (F.pmod(F.xxhash64(F.lit(int(seed)), F.col(id_col)),
-                F.lit(2 ** 53)) + 1)
-        / F.lit(float(2 ** 53))
-    )
-    key = F.log(u) / F.col(weight_col)  # maximize u^(1/w) == maximize this
-    w = Window.partitionBy(*(strata_cols or [])).orderBy(
-        F.col("__k").desc(), F.col(id_col)
-    )
-    return (
-        df.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
-        .withColumn("__k", key)
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= n)
-        .drop("__k", "__rk")
-    )

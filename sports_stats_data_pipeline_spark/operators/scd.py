@@ -13,9 +13,6 @@ Operators:
 - :func:`scd2_build` — collapse an observation/change stream into
   version rows ``(attrs, valid_from, valid_to, version, is_current,
   n_obs)``. Run-length change detection via null-safe lag comparison.
-- :func:`scd2_apply_batch` — incremental CDC apply: rebuild history for
-  ONLY the keys present in the batch, union untouched keys through.
-  O(batch keys × their history), not O(full dimension).
 - :func:`point_in_time_lookup` — attach to each fact row the dimension
   version in effect at the fact timestamp. Reuses the single-shuffle
   as-of union-trick (operators/asof.py) rather than an inequality
@@ -67,9 +64,9 @@ def scd2_build(
     ``seq_col`` orders observations within a key and MUST be unique per
     key (ties would make run boundaries nondeterministic — pre-collapse
     to one row per (key, seq) first, as the driver query does).
-    ``weight_col`` (optional) weights ``n_obs`` — used by
-    :func:`scd2_apply_batch` so a rebuilt run preserves the observation
-    count its collapsed history rows already carried.
+    ``weight_col`` (optional) weights ``n_obs`` — so a run rebuilt from
+    collapsed history rows preserves the observation count they already
+    carried.
 
     Returns ``keys + attrs + [valid_from, valid_to, version,
     is_current, n_obs]`` where ``valid_from`` is the first ``seq_col``
@@ -112,53 +109,6 @@ def scd2_build(
         F.lead("valid_from").over(w_ver).isNull().alias("is_current"),
         "n_obs",
     )
-
-
-def scd2_apply_batch(
-    history: DataFrame,
-    batch: DataFrame,
-    keys: Sequence[str],
-    attrs: Sequence[str],
-    seq_col: str,
-) -> DataFrame:
-    """Incremental CDC apply: merge a batch of new observations into an
-    existing SCD2 ``history`` (a prior :func:`scd2_build` output).
-
-    Only keys PRESENT in the batch are rebuilt — their history rows are
-    re-expanded into weighted change rows (``valid_from`` as the seq,
-    ``n_obs`` as the weight) and re-collapsed together with the batch;
-    untouched keys pass through unchanged. Batch seqs must be unique
-    per key and not collide with existing ``valid_from`` seqs.
-
-    For in-order batches (every batch seq later than its key's last
-    observed seq — the normal CDC append case) the result is EXACTLY a
-    full rebuild over (all past observations ∪ batch), at
-    O(|batch keys| × their history) cost — the same O(Δ) contract as
-    operators/incremental.py; pinned by
-    tests/test_scd.py::test_apply_batch_equals_rebuild. Out-of-order
-    backfill rows are merged against the COLLAPSED history (runs
-    replayed at their ``valid_from``): a late row splitting an old run
-    mid-span can't resurrect the per-observation detail compaction
-    discarded, so run boundaries then reflect the replay, not the raw
-    pre-compaction stream.
-    """
-    ks = list(keys)
-    batch_keys = batch.select(*ks).distinct()
-    untouched = history.join(batch_keys, ks, "left_anti")
-    affected = history.join(batch_keys, ks, "left_semi")
-    replay = affected.select(
-        *ks,
-        *attrs,
-        F.col("valid_from").alias(seq_col),
-        F.col("n_obs").alias(_WEIGHT),
-    )
-    merged = replay.unionByName(
-        batch.select(
-            *ks, *attrs, seq_col, F.lit(1).cast("long").alias(_WEIGHT)
-        )
-    )
-    rebuilt = scd2_build(merged, ks, attrs, seq_col, weight_col=_WEIGHT)
-    return untouched.unionByName(rebuilt)
 
 
 def point_in_time_lookup(

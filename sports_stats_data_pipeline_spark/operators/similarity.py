@@ -24,101 +24,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_filter,
-    k: int = 3,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    kmeans_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN with a real k-means coarse quantizer (operators.kmeans).
-
-    Index: every corpus vector is assigned to its nearest of ``n_cells``
-    centroids (at 100 TB this assignment is written at ingest and the
-    corpus is partitioned/bucketed by cell — the query-time join then
-    prunes to the probed cells' partitions). Search: each query scores
-    the ``n_cells`` centroids (broadcast, tiny), probes its ``n_probe``
-    nearest cells, and brute-forces only those cells' members —
-    candidate work drops by ~n_cells/n_probe versus a full scan, the
-    standard IVF recall/cost dial.
-
-    ``n_probe >= n_cells`` degenerates to exact brute force — the
-    equality test_similarity pins (same deterministic (score desc, id)
-    tie-break as plans.documents.embedding_cosine_topk).
-
-    Returns (query_id, neighbor_id, rank, score_r4).
-    """
-    from ..functions.vectors import as_double, cosine
-    from .kmeans import kmeans_fit_assign
-
-    assigned, centroids = kmeans_fit_assign(
-        embeddings, k=n_cells, iters=kmeans_iters, id_col=id_col, vec_col=vec_col
-    )
-    # persist the assignment: it is the index-build output, referenced by
-    # the corpus join below and recomputed from the full Lloyd lineage
-    # otherwise (at ingest time this table is WRITTEN, not cached).
-    assigned = assigned.persist()
-    corpus = (
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("cv"),
-        )
-        .join(
-            assigned.select(
-                F.col(id_col).alias("neighbor_id"), "cell"
-            ),
-            "neighbor_id",
-        )
-    )
-
-    q = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("query_id"),
-        as_double(F.col(vec_col)).alias("qv"),
-    )
-    # rank the centroid table per query; both sides of this join are
-    # tiny (q × n_cells rows), the broadcast is of the PROBE LIST.
-    cw = Window.partitionBy("query_id").orderBy(
-        F.col("cdist"), F.col("cell")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "cdist",
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .withColumn("crank", F.row_number().over(cw))
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        F.broadcast(probes)
-        .join(corpus, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round("cos", 4).alias("score_r4"),
-        )
-    )
-
-
 def ann_topk_numpy(
     embeddings: DataFrame,
     query_filter,
@@ -183,218 +88,3 @@ def ann_topk_numpy(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("score", 4).alias("score_r4"))
     )
-
-
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    kmeans_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_partitions: int = 8,
-) -> None:
-    """Materialize the IVF index for a corpus at ``path``:
-
-    - ``centroids/`` — ``(cell, centroid array<double>)``, the coarse
-      quantizer (tiny: ``n_cells`` rows, broadcast at query time);
-    - ``cells/``     — ``(cell, id_col, v array<double>)``,
-      range-partitioned and sorted by ``cell`` so a probe's
-      ``cell IN (...)`` predicate prunes parquet row groups (min/max
-      stats) and only the probed cells' vectors are read.
-
-    The executable form of the "write the assignment at ingest"
-    prescription in :func:`ivf_topk`'s docstring (the same move as
-    operators.search.build_bm25_index): building costs the k-means fit
-    plus one corpus scan, after which every query batch touches only
-    the probed fraction of the index — the corpus itself is never
-    re-read or re-clustered. At 100 TB ``cells/`` would additionally be
-    partitioned by cell directory for partition-level pruning; the
-    row-group layout here is the same contract at file granularity.
-    """
-    from ..functions.vectors import as_double
-    from .kmeans import kmeans_fit_assign
-
-    assigned, centroids = kmeans_fit_assign(
-        embeddings,
-        k=n_cells,
-        iters=kmeans_iters,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    cells = (
-        embeddings.select(
-            F.col(id_col), as_double(F.col(vec_col)).alias("v")
-        )
-        .join(assigned.select(id_col, "cell"), id_col)
-        .select("cell", id_col, "v")
-        .repartitionByRange(cell_partitions, "cell")
-        .sortWithinPartitions("cell")
-    )
-    cells.write.mode("overwrite").parquet(f"{path}/cells")
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-    assigned.unpersist()
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_filter,
-    k: int = 3,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """:func:`ivf_topk` served from a :func:`build_ivf_index` layout —
-    identical output contract for the same quantizer, zero clustering
-    work at query time.
-
-    The probed cell ids are collected to the driver (bounded: queries ×
-    n_probe ints — the query set, not data) and applied as a literal
-    ``cell IN (...)`` filter, which parquet pushes into row-group
-    pruning on the cell-sorted layout: candidate I/O is proportional to
-    the probed cells, not the corpus. ``query_filter`` is a Column
-    predicate over the index columns ``(cell, id_col, v)`` — typically
-    an id predicate.
-    """
-    from ..functions.vectors import cosine
-
-    centroids = spark.read.parquet(f"{path}/centroids")
-    cells_tbl = spark.read.parquet(f"{path}/cells")
-    q = cells_tbl.filter(query_filter).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-    )
-    cw = Window.partitionBy("query_id").orderBy(F.col("cdist"), F.col("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "cdist",
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"),
-                    F.col("centroid"),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .withColumn("crank", F.row_number().over(cw))
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", "qv", "cell")
-        .persist()
-    )
-    probe_cells = sorted(
-        r["cell"] for r in probes.select("cell").distinct().collect()
-    )
-    cand = cells_tbl.filter(F.col("cell").isin(probe_cells)).select(
-        "cell", F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        F.broadcast(probes)
-        .join(cand, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round("cos", 4).alias("score_r4"),
-        )
-    )
-
-
-def append_to_ivf_index(
-    spark,
-    path: str,
-    new_embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_partitions: int = 2,
-) -> None:
-    """Incrementally add vectors to a :func:`build_ivf_index` layout
-    WITHOUT re-clustering: assign the batch against the index's frozen
-    coarse quantizer (``centroids/`` — broadcast, one batch scan) and
-    append the new ``(cell, id, v)`` rows as additional cell-sorted
-    parquet files.
-
-    This is the 100 TB index-maintenance contract: ingest cost is
-    O(batch), the existing corpus is never re-read, and queries keep
-    pruning at row-group granularity — each appended file is itself
-    cell-sorted, so its min/max stats exclude unprobed cells exactly
-    like the base files' (a probed cell now reads one region per
-    append generation; compact with operators.maintenance when
-    generations accumulate, the same OPTIMIZE story as the mart).
-
-    Freezing the quantizer is the standard IVF trade (FAISS
-    ``add`` vs ``train``): cell populations drift as the distribution
-    does — monitor with operators.drift over the cell histogram and
-    rebuild when PSI crosses the threshold. Identity contract (pinned
-    in test_similarity_and_maintenance): append-then-query ==
-    one-shot cells/ rebuild over the union UNDER THE SAME CENTROIDS.
-
-    Caller contract: ids in ``new_embeddings`` must not already exist
-    in the index (dedup upstream — this is an append, not an upsert).
-    """
-    from ..functions.vectors import as_double
-    from .kmeans import _assign
-
-    centroids = spark.read.parquet(f"{path}/centroids")
-    vecs = new_embeddings.select(
-        F.col(id_col).alias("__id"),
-        as_double(F.col(vec_col)).alias("__v"),
-    )
-    assigned = _assign(vecs, centroids)
-    (
-        vecs.join(assigned, "__id")
-        .select(
-            "cell",
-            F.col("__id").alias(id_col),
-            F.col("__v").alias("v"),
-        )
-        .repartitionByRange(cell_partitions, "cell")
-        .sortWithinPartitions("cell")
-        .write.mode("append")
-        .parquet(f"{path}/cells")
-    )
-
-
-def compact_ivf_cells(
-    spark,
-    path: str,
-    cell_partitions: int = 8,
-) -> None:
-    """Compact an IVF index's append generations back into one
-    cell-sorted layout (crash-safe staged replace).
-
-    Generic ``maintenance.compact_parquet`` would merge the files but
-    DESTROY the cell clustering (it repartitions round-robin, so every
-    file's cell min/max spans the whole range and the probe filter
-    stops pruning). This rewrite re-range-partitions and re-sorts by
-    cell, restoring one tight region per cell — run it when
-    :func:`append_to_ivf_index` generations accumulate (same cadence
-    as the mart's OPTIMIZE)."""
-    from .sinks import promote_staging
-
-    cells = spark.read.parquet(f"{path}/cells")
-    (
-        cells.repartitionByRange(cell_partitions, "cell")
-        .sortWithinPartitions("cell")
-        .write.mode("overwrite")
-        .parquet(f"{path}/cells.staging")
-    )
-    promote_staging(f"{path}/cells")
-
-
-def ivf_cell_histogram(spark, path: str):
-    """Per-cell vector counts of a persisted IVF index — the drift
-    input for the frozen-quantizer rebuild decision: persist a
-    reference histogram at build time, then ``operators.drift.psi``
-    over (cell, n) tells you when the data has walked away from the
-    centroids and the index needs re-training."""
-    cells = spark.read.parquet(f"{path}/cells")
-    return cells.groupBy("cell").agg(F.count("*").alias("n"))

@@ -990,14 +990,13 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # position, fragments, query-less URLs, and a colliding path family
 # (doc_id % 13) that makes canonical-URL dedup non-trivial.
 #
-# Quota selection = row_number over md5(doc_id) within domain — the
-# stratified_sample bottom-k-of-hash shape (operators/sampling.py) with
-# an engine-portable hash. 100 TB note: a mega-domain makes that window
-# partition hot; the scale remedy is operators.sampling.
-# stratified_sample_scalable — rank within (domain, hash-prefix)
-# first, then over the bounded survivors; identical output, bounded
-# partitions (equality pinned in test_sampling). The regex rules themselves are per-row
-# projections in whole-stage codegen: no shuffle until the domain agg.
+# Quota selection = row_number over md5(doc_id) within domain — a
+# bottom-k-of-hash stratified sample with an engine-portable hash.
+# 100 TB note: a mega-domain makes that window partition hot; the scale
+# remedy is to rank within (domain, hash-prefix) first, then over the
+# bounded survivors — identical output, bounded partitions. The regex
+# rules themselves are per-row projections in whole-stage codegen: no
+# shuffle until the domain agg.
 # --------------------------------------------------------------------------
 _SRC_SQL = """COALESCE(NULLIF(
       regexp_replace(lower(source), '[^a-z0-9-]', '', 'g'), ''), 'src')"""

@@ -219,38 +219,6 @@ def _parse_paired_table(
     return out
 
 
-class FightLinksUDTF:
-    """User-defined table function form of the S3 fan-out: one event page
-    in, one row per contained fight link out — the formal Spark mapping of
-    the reference's ``get_fight_links`` generator (fights_scraper.py:61-66,
-    SURVEY.md §2.11).
-
-    Registered via :func:`register_fight_links_udtf`; use from SQL as a
-    LATERAL table function::
-
-        SELECT p.url AS event_url, f.url AS fight_url
-        FROM pages p, LATERAL fight_links(p.html, 'fight-details') f
-
-    Note the hot ingest path uses the pure-expression
-    ``regexp_extract_all`` form (scrape_pipeline.discover_fight_urls) —
-    codegen-side, no Python crossing; the UDTF is the general shape for
-    extraction logic a regex cannot express.
-    """
-
-    def eval(self, html: str, marker: str):  # noqa: D102 (UDTF contract)
-        for url in extract_links(html, marker):
-            yield (url,)
-
-
-def register_fight_links_udtf(spark, name: str = "fight_links"):
-    """Register :class:`FightLinksUDTF` as SQL table function ``name``."""
-    from pyspark.sql.functions import udtf
-
-    wrapped = udtf(FightLinksUDTF, returnType="url string")
-    spark.udtf.register(name, wrapped)
-    return wrapped
-
-
 def parsed_frame(
     urls, htmls, kind: str, field_names: list[str]
 ) -> pd.DataFrame:

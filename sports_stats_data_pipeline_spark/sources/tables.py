@@ -260,14 +260,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table and register it as a temp view for spark.sql use."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables
-
-
 #: integral column types and the magnitude bound of their values
 _INT_LIMITS = {T.IntegerType: 1 << 31, T.LongType: 1 << 63}
 

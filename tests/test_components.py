@@ -12,7 +12,6 @@ import pytest
 
 from sports_stats_data_pipeline_spark.operators.components import (
     connected_components,
-    connected_components_star,
 )
 
 
@@ -54,58 +53,6 @@ def test_max_rounds_guard(spark, monkeypatch):
             [(i, i + 1) for i in range(1, 6)],
             max_rounds=2,
         )
-
-
-# ---------------------------------------------------------------------------
-# star contraction (deep-graph path)
-# ---------------------------------------------------------------------------
-def _ccs(spark, nodes, edges, **kw):
-    n = spark.createDataFrame([(x,) for x in nodes], "id long")
-    e = spark.createDataFrame(
-        edges or [(None, None)], "src long, dst long"
-    ).filter("src is not null")
-    out = connected_components_star(n, e, **kw)
-    return {r["id"]: r["cluster_id"] for r in out.collect()}
-
-
-def test_star_matches_hashmin_on_clustered_graph(spark):
-    import random
-
-    rng = random.Random(7)
-    nodes = list(range(120))
-    # 12 clusters of 10, random spanning edges + extras inside each
-    edges = []
-    for c in range(12):
-        members = nodes[c * 10 : (c + 1) * 10]
-        for m in members[1:]:
-            edges.append((m, rng.choice(members[: members.index(m)])))
-        edges.append((rng.choice(members), rng.choice(members)))
-    assert _ccs(spark, nodes, edges) == _cc(spark, nodes, edges)
-
-
-def test_star_converges_on_chain_where_hashmin_round_budget_fails(spark, monkeypatch):
-    # path graph of 120 nodes: diameter 119 — hash-min's DISTRIBUTED
-    # loop (forced: the small-graph fast path would solve it driver-
-    # side) cannot finish in 8 rounds, star converges in O(log^2 n)
-    from sports_stats_data_pipeline_spark.operators import components as C
-
-    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 0)
-    nodes = list(range(120))
-    edges = [(i, i + 1) for i in range(119)]
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        _cc(spark, nodes, edges, max_rounds=8)
-    got = _ccs(spark, nodes, edges, max_rounds=20)
-    assert got == {i: 0 for i in range(120)}
-
-
-def test_star_singletons_duplicates_self_edges(spark):
-    got = _ccs(spark, [1, 2, 3, 10, 11, 99], [(2, 1), (1, 2), (2, 3), (11, 10), (3, 3)])
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
-
-
-def test_star_empty_edges_all_singletons(spark):
-    got = _ccs(spark, [4, 5, 6], [])
-    assert got == {4: 4, 5: 5, 6: 6}
 
 
 def test_small_graph_fast_path_matches_distributed_loop(spark, monkeypatch):

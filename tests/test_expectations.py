@@ -1,6 +1,6 @@
 """Data-quality expectations: every kind against a DuckDB twin on the
 real tables, the one-scan plan shape for row-level kinds, NULL
-three-valued-logic fail-shut behavior, and the promote gate."""
+three-valued-logic fail-shut behavior, and unknown kinds failing loudly."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from sports_stats_data_pipeline_spark.operators.expectations import (
     accepted_values,
     expression,
     foreign_key,
-    gate,
     in_range,
     not_null,
     unique,
@@ -132,19 +131,12 @@ def test_row_level_kinds_share_one_scan(spark):
     assert plan.count("Location: InMemoryFileIndex") == 1
 
 
-def test_gate_raises_with_names(spark):
-    df = spark.createDataFrame([(1,), (None,)], "k long")
-    gate(df, [unique(["k"])])  # passes
-    with pytest.raises(ValueError, match="not_null_k .1 violations."):
-        gate(df, [not_null("k")])
-
-
 def test_unknown_kind_raises_up_front(spark):
     """An unrecognized kind must fail loudly — silently skipping it
-    would let gate() pass as if the check ran (ADVICE r3)."""
+    would let a caller pass as if the check ran (ADVICE r3)."""
     df = spark.createDataFrame([(1,)], "k long")
     bogus = Expectation("my_check", "no_such_kind", {})
     with pytest.raises(ValueError, match="no_such_kind"):
         validate(df, [bogus])
     with pytest.raises(ValueError, match="no_such_kind"):
-        gate(df, [not_null("k"), bogus])
+        validate(df, [not_null("k"), bogus])

@@ -155,60 +155,3 @@ def test_png_decode_rejects_junk_with_valueerror(junk):
     for payload in (junk, PNG_SIGNATURE + junk):
         with _pytest.raises(ValueError):
             decode_png(payload)
-
-
-# ---------------------------------------------------------------------------
-# BPE encoder equivalence (round 6): the Arrow encoder's rank-floor
-# skip-ahead loop vs literal sequential replay of every merge — the
-# property the encode_words_pandas docstring claims BY CONSTRUCTION.
-# Pure-python property (no Spark): the floor loop is extracted here
-# exactly as encode_one implements it.
-# ---------------------------------------------------------------------------
-
-
-def _seq_replay(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    syms = list(word)
-    for a, b in merges:
-        syms = _ref_merge(syms, a, b)
-    return syms
-
-
-def _rank_floor(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    syms = list(word)
-    floor = 0
-    while len(syms) > 1:
-        best = None
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and r >= floor and (
-                best is None or r < best
-            ):
-                best = r
-        if best is None:
-            break
-        a, b = merges[best]
-        syms = _ref_merge(syms, a, b)
-        floor = best + 1
-    return syms
-
-
-@given(
-    word=st.text(alphabet="abcd", min_size=0, max_size=14),
-    merges=st.lists(
-        st.tuples(
-            st.text(alphabet="abcd", min_size=1, max_size=3),
-            st.text(alphabet="abcd", min_size=1, max_size=3),
-        ),
-        min_size=0,
-        max_size=8,
-        unique=True,
-    ),
-)
-@settings(max_examples=2000, deadline=None)
-def test_rank_floor_equals_sequential_replay(word, merges):
-    """For ANY word and ANY merge table — including tables where a
-    later merge recreates an earlier-rank pair (the restart-greedy
-    divergence case) — the rank-floor loop must equal sequential
-    replay exactly."""
-    assert _rank_floor(word, merges) == _seq_replay(word, merges)

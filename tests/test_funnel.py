@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from sports_stats_data_pipeline_spark.operators.funnel import (
-    funnel_conversion,
     funnel_steps,
 )
 from sports_stats_data_pipeline_spark.sources.tables import load_table
@@ -54,25 +53,6 @@ def test_hand_anchored_funnel(spark):
         ).collect()
     }
     assert out == {1: (3, True), 2: (2, True), 3: (2, True), 4: (2, True)}
-
-
-def test_conversion_counts(spark):
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    for u in range(10):
-        rows.append((eid, t0, u, "view")); eid += 1
-        if u < 6:
-            rows.append((eid, t0 + dt.timedelta(minutes=1), u, "click")); eid += 1
-        if u < 2:
-            rows.append((eid, t0 + dt.timedelta(minutes=2), u, "purchase")); eid += 1
-    got = {
-        r["step"]: r["n_users"]
-        for r in funnel_conversion(_mk(spark, rows), STEPS).collect()
-    }
-    assert got == {1: 10, 2: 6, 3: 2}
 
 
 def test_matches_duckdb_sequential_twin_on_events(spark):

@@ -126,58 +126,3 @@ def test_summary_rows_bounded_per_partition(spark):
         r["weight"] for r in summ.collect() if r["value"] is None
     )
     assert total == 5000
-
-
-def _grouped_exact(df, g, col, denom):
-    from pyspark.sql import Window
-
-    totals = df.groupBy(F.col(g).cast("string").alias("g")).agg(
-        F.count("*").alias("t")
-    )
-    return {
-        (r["g"], r["v"], r["n"], r["t"])
-        for r in df.groupBy(
-            F.col(g).cast("string").alias("g"),
-            F.col(col).cast("string").alias("v"),
-        )
-        .agg(F.count("*").alias("n"))
-        .join(totals, "g")
-        .filter(F.col("n") * denom > F.col("t"))
-        .collect()
-    }
-
-
-def test_grouped_matches_exact(spark):
-    from sports_stats_data_pipeline_spark.operators.heavyhitters import (
-        heavy_hitters_grouped,
-    )
-
-    # per-segment skew: segment A dominated by one value, B uniform,
-    # C dominated by two
-    df = spark.range(6000).select(
-        F.when(F.col("id") % 3 == 0, F.lit("A"))
-        .when(F.col("id") % 3 == 1, F.lit("B"))
-        .otherwise(F.lit("C"))
-        .alias("seg"),
-        F.when((F.col("id") % 3 == 0) & (F.col("id") % 2 == 0), F.lit("hot"))
-        .when(
-            (F.col("id") % 3 == 2) & (F.col("id") % 4 < 2),
-            F.concat(F.lit("h"), (F.col("id") % 2).cast("string")),
-        )
-        .otherwise(F.concat(F.lit("u"), (F.col("id") % 700).cast("string")))
-        .alias("v"),
-    )
-    got = {
-        (r["group"], r["value"], r["n"], r["total"])
-        for r in heavy_hitters_grouped(df, "seg", "v", 10).collect()
-    }
-    assert got == _grouped_exact(df, "seg", "v", 10)
-    assert any(g == "A" and v == "hot" for g, v, _, _ in got)
-    # partition invariance
-    got7 = {
-        (r["group"], r["value"], r["n"], r["total"])
-        for r in heavy_hitters_grouped(
-            df.repartition(7), "seg", "v", 10
-        ).collect()
-    }
-    assert got7 == got

@@ -218,29 +218,6 @@ def test_ingest_end_to_end_and_resume_safety(spark, fleet_transport, tmp_path):
     assert df4.count() == 11
 
 
-def test_fight_links_udtf_lateral_join(spark):
-    from sports_stats_data_pipeline_spark.sources.html_source import (
-        register_fight_links_udtf,
-    )
-    from sports_stats_data_pipeline_spark.sources.tables import (
-        ensure_session_confs,
-    )
-
-    ensure_session_confs(spark)
-    register_fight_links_udtf(spark)
-    spark.createDataFrame(
-        [("e1", EVENT_INDEX_PAGE)], schema="url string, html string"
-    ).createOrReplaceTempView("event_pages")
-    rows = spark.sql(
-        "SELECT p.url AS event_url, f.url AS fight_url "
-        "FROM event_pages p, LATERAL fight_links(p.html, 'fight-details') f"
-    ).collect()
-    assert [r["fight_url"] for r in rows] == [
-        "http://example.com/fight-details/f1",
-        "http://example.com/fight-details/f2",
-    ]
-
-
 #: FIGHTER_PAGE with reordered attributes, extra attributes, and extra
 #: classes — what a real site's markup drift looks like; bs4 tolerates
 #: these and the regex selectors must too (class-based matching).

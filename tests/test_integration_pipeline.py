@@ -21,9 +21,9 @@ from sports_stats_data_pipeline_spark.functions.text import (
     token_count,
 )
 from sports_stats_data_pipeline_spark.operators.expectations import (
-    gate,
     not_null,
     unique,
+    validate,
 )
 from sports_stats_data_pipeline_spark.operators.sampling import (
     deterministic_split,
@@ -59,7 +59,10 @@ def _curate(spark):
         (F.col("plang") != "und") & (F.col("n_tokens") >= 10)
     )
     # 4. promote-blocking expectations on the curated set
-    gate(kept, [not_null("doc_id"), unique(["doc_id"]), not_null("norm")])
+    report = validate(
+        kept, [not_null("doc_id"), unique(["doc_id"]), not_null("norm")]
+    ).collect()
+    assert [r["name"] for r in report if r["passed"] == 0] == []
     # 5. deterministic train/val/test split
     split = deterministic_split(
         kept, id_col="doc_id",

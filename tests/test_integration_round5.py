@@ -1,8 +1,7 @@
 """Round-5 integration: the web-curation front half as a user runs it —
 synthesize messy URLs → canonicalize → exact-dedup by canonical URL →
-per-domain quota → weighted quality draw → dominance check on the
-result — with invariants at every stage (the test_integration_pipeline
-pattern, extended to the round-5 operators)."""
+dominance check on the result — with invariants at every stage (the
+test_integration_pipeline pattern, extended to the round-5 operators)."""
 
 from __future__ import annotations
 
@@ -16,10 +15,6 @@ from sports_stats_data_pipeline_spark.functions.url import (
 )
 from sports_stats_data_pipeline_spark.operators.heavyhitters import (
     heavy_hitters,
-)
-from sports_stats_data_pipeline_spark.operators.sampling import (
-    stratified_sample_scalable,
-    weighted_sample,
 )
 from sports_stats_data_pipeline_spark.sources.tables import load_table
 
@@ -67,39 +62,10 @@ def test_url_curation_chain(spark):
     # survivors are the even doc_ids (first-wins by doc_id order)
     assert deduped.filter(F.col("doc_id") % 2 == 1).count() == 0
 
-    # 3. per-domain quota (the scalable prefix-split draw): at most Q
-    # per registered domain, deterministic across partitionings
+    # 3. dominance check on the canonical set: no single registered
+    # domain holds 50% of it (heavy_hitters as the post-hoc gate)
     deduped = deduped.withColumn(
         "domain", registered_domain(url_host("norm_url"))
     )
-    Q = 5
-    quota = stratified_sample_scalable(deduped, ["domain"], Q)
-    sizes = {
-        r["domain"]: r["n"]
-        for r in quota.groupBy("domain").agg(F.count("*").alias("n")).collect()
-    }
-    assert sizes and all(n <= Q for n in sizes.values())
-    again = {
-        r["domain"]: r["n"]
-        for r in stratified_sample_scalable(
-            deduped.repartition(7), ["domain"], Q
-        )
-        .groupBy("domain")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert again == sizes
-
-    # 4. weighted draw by document length (quality proxy): sample is a
-    # subset of the quota'd pool and deterministic
-    drawn = weighted_sample(
-        quota, 3, "n_chars", strata_cols=["domain"]
-    )
-    pool_ids = {r["doc_id"] for r in quota.collect()}
-    drawn_ids = {r["doc_id"] for r in drawn.collect()}
-    assert drawn_ids <= pool_ids and drawn_ids
-
-    # 5. dominance check on the final mix: no single domain exceeds
-    # 50% of the drawn set (heavy_hitters as the post-hoc gate)
-    hh = heavy_hitters(drawn, "domain", 2)
+    hh = heavy_hitters(deduped, "domain", 2)
     assert hh.count() == 0

@@ -92,50 +92,3 @@ def test_merge_resume_safety_any_batch_split(spark, rows, n_batches):
     got = sorted(map(tuple, sink.collect()))
     want = sorted(map(tuple, expected.collect()))
     assert got == want
-
-
-# ---------------------------------------------------------------------------
-# vectors: l2_normalize and mean_pool
-# ---------------------------------------------------------------------------
-
-
-def test_l2_normalize_and_zero_vector(spark):
-    import math
-
-    from pyspark.sql import functions as F
-
-    from sports_stats_data_pipeline_spark.functions.vectors import (
-        l2_normalize, norm,
-    )
-
-    df = spark.createDataFrame(
-        [(1, [3.0, 4.0]), (2, [0.0, 0.0])], "id long, v array<double>"
-    )
-    out = {r["id"]: (r["u"], r["n"]) for r in df.select(
-        "id", l2_normalize(F.col("v")).alias("u"),
-        norm(l2_normalize(F.col("v"))).alias("n")).collect()}
-    assert out[1][0] == [0.6, 0.8] and math.isclose(out[1][1], 1.0)
-    assert out[2][0] == [0.0, 0.0]  # zero vector passes through
-
-
-def test_mean_pool_matches_numpy(spark):
-    import numpy as np
-
-    from sports_stats_data_pipeline_spark.functions.vectors import mean_pool
-    from sports_stats_data_pipeline_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    pooled = {
-        r["label"]: r["pooled"]
-        for r in mean_pool(emb, ["label"], "embedding").collect()
-    }
-    rows = emb.collect()
-    by_label = {}
-    for r in rows:
-        by_label.setdefault(r["label"], []).append(
-            np.array(r["embedding"], dtype=np.float64)
-        )
-    for lbl, vecs in by_label.items():
-        want = np.mean(vecs, axis=0)
-        got = np.array(pooled[lbl])
-        assert np.allclose(got, want, rtol=1e-12), lbl

@@ -1,6 +1,6 @@
 """Property tests for the round-5 operators against pure-Python
-reference models over randomized inputs: attribution credit, fixed-point
-PageRank, and winsorize idempotence."""
+reference models over randomized inputs: attribution credit and
+fixed-point PageRank."""
 
 from __future__ import annotations
 
@@ -8,12 +8,10 @@ from collections import Counter, defaultdict
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from sports_stats_data_pipeline_spark.operators.attribution import (
     attribute_conversions,
 )
-from sports_stats_data_pipeline_spark.operators.outliers import winsorize
 from sports_stats_data_pipeline_spark.operators.pagerank import (
     SCALE,
     pagerank_fixedpoint,
@@ -136,27 +134,3 @@ def test_pagerank_fixedpoint_matches_reference(spark, edges):
     # parallel edges are honoured as given (module contract), so the
     # reference counts multiplicity too
     assert got == _ref_pagerank_fixed(edges, 3)
-
-
-@_SLOW
-@given(
-    st.lists(st.integers(-1000, 1000), min_size=1, max_size=30),
-    st.integers(0, 30),
-    st.integers(70, 100),
-)
-def test_winsorize_idempotent_and_bounded(spark, vals, lo_pct, hi_pct):
-    lo_bp, hi_bp = lo_pct * 100, hi_pct * 100
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    once = winsorize(df, "v", lower_bp=lo_bp, upper_bp=hi_bp)
-    rows = once.collect()
-    lo, hi = rows[0]["lo"], rows[0]["hi"]
-    assert all(lo <= r["v_w"] <= hi for r in rows)
-    # idempotence: clamping the clamped column with the same bounds
-    # changes nothing (the bounds of the clamped data are the bounds)
-    again = winsorize(
-        once.select(F.col("v_w").alias("v")),
-        "v",
-        lower_bp=lo_bp,
-        upper_bp=hi_bp,
-    ).collect()
-    assert sorted(r["v_w"] for r in again) == sorted(r["v_w"] for r in rows)

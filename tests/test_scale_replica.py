@@ -432,8 +432,10 @@ def test_skew_docs_caps_bind(spark):
 
     docs = _neardup_docs(spark, SKEW_DIR)
     n = docs.count()
-    # the plan's OWN banding construction (shared helper) — this guard
-    # can never observe a stale signature width / band shape
+    # a standalone rebuild of the banding neardup_minhash_pairs does
+    # inline, from the same _MINHASH_HASHES / _MINHASH_BAND_ROWS
+    # constants: a changed signature width or band shape reaches this
+    # guard, a changed banding expression in the plan does not
     banded = _minhash_band_relation(docs)
     over = (
         banded.groupBy("band_key")

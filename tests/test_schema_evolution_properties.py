@@ -4,8 +4,7 @@ through evolve_to_schema inside the value gate), so its contract gets
 the property treatment: over random schema pairs, conform must succeed
 EXACTLY when every source column reaches its target type by identity or
 safe widening (and no unexpected extras), the output schema must equal
-the target verbatim, and merge_schemas must produce a target that
-accepts BOTH inputs by construction.
+the target verbatim.
 
 All properties run on empty DataFrames — conform is a pure projection,
 so the schema is the whole contract and no Spark job is triggered.
@@ -20,7 +19,6 @@ from pyspark.sql import types as T
 from sports_stats_data_pipeline_spark.operators.schema_evolution import (
     _SAFE_WIDENINGS,
     evolve_to_schema,
-    merge_schemas,
 )
 
 #: type pool spanning every widening chain plus never-widenable types
@@ -96,28 +94,3 @@ def test_conform_succeeds_iff_legal_and_yields_target(spark, pair):
     else:
         with pytest.raises(ValueError, match="schema evolution rejected"):
             evolve_to_schema(batch, tgt)
-
-
-@settings(max_examples=60, deadline=None)
-@given(pair=_schema_pair())
-def test_merge_schemas_accepts_both_inputs(spark, pair):
-    """Whenever merge_schemas(a, b) succeeds, BOTH an a-shaped and a
-    b-shaped batch must conform to the merged target — the sink
-    evolution contract the operator exists for."""
-    a, b = pair
-    try:
-        merged = merge_schemas(a, b)
-    except ValueError:
-        return  # incompatible conflict — nothing to assert
-    for side in (a, b):
-        out = evolve_to_schema(spark.createDataFrame([], side), merged)
-        assert out.schema == merged
-    # merge is symmetric on the resolved TYPES (order differs by spec)
-    try:
-        merged_ba = merge_schemas(b, a)
-    except ValueError:
-        merged_ba = None
-    assert merged_ba is not None, "merge succeeded one way only"
-    assert {(f.name, f.dataType) for f in merged.fields} == {
-        (f.name, f.dataType) for f in merged_ba.fields
-    }

@@ -100,44 +100,3 @@ def test_k_limit_and_validation(spark):
     assert bm25_topk(docs, ["query"], k=7).count() == 7
     with pytest.raises(ValueError):
         bm25_topk(docs, [], k=3)
-
-
-def test_indexed_equals_recomputed(spark, tmp_path):
-    from sports_stats_data_pipeline_spark.operators.search import (
-        bm25_topk_indexed,
-        build_bm25_index,
-    )
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    path = str(tmp_path / "bm25_index")
-    build_bm25_index(docs, path)
-    direct = bm25_topk(docs, QT, k=15).collect()
-    indexed = bm25_topk_indexed(spark, path, QT, k=15).collect()
-    assert [tuple(r) for r in indexed] == [tuple(r) for r in direct]
-    # zero corpus access: the indexed plan reads only index parquet —
-    # no documents.parquet scan, and the term filter reaches the
-    # postings read (pushed into parquet row-group pruning)
-    plan = indexed_plan = bm25_topk_indexed(spark, path, QT, k=15)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "documents.parquet" not in plan
-    assert "PushedFilters" in plan
-    assert "In(term" in plan.split("PushedFilters", 1)[1][:200]
-
-
-def test_indexed_empty_corpus_and_guard(spark, tmp_path):
-    from sports_stats_data_pipeline_spark.operators.search import (
-        bm25_topk_indexed,
-        build_bm25_index,
-    )
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    # direct path: empty corpus returns an empty, correctly-typed frame
-    out = bm25_topk(empty, QT, k=5)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "doc_id", "score_micro", "n_query_terms_hit"
-    ]
-    # indexed path over an empty index behaves the same
-    path = str(tmp_path / "empty_index")
-    build_bm25_index(empty, path)
-    assert bm25_topk_indexed(spark, path, QT, k=5).count() == 0

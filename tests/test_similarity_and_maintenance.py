@@ -49,40 +49,6 @@ def test_numpy_ann_score_ties_keep_smaller_ids(spark):
         assert out == [(1, 1), (2, 2), (3, 3)], (parts, out)
 
 
-def _rank_map(df):
-    return {(r["query_id"], r["rank"]): r["neighbor_id"] for r in df.collect()}
-
-
-def test_ivf_probe_all_cells_equals_brute_force(spark):
-    # n_probe = n_cells degenerates to an exact scan: every cell is
-    # probed, so IVF must match the oracle-checked brute-force baseline
-    # bit-for-bit (same deterministic tie-break).
-    from sports_stats_data_pipeline_spark.operators.similarity import ivf_topk
-
-    emb = load_table(spark, SF, "embeddings")
-    ivf = ivf_topk(emb, F.col("vec_id") < 8, k=3, n_cells=8, n_probe=8)
-    slow = embedding_cosine_topk(spark, SF)
-    assert _rank_map(ivf) == _rank_map(slow)
-
-
-def test_ivf_partial_probe_recall(spark):
-    # the recall/cost dial: probing 3 of 8 k-means cells must still
-    # recover most true neighbors (embeddings cluster well by label);
-    # candidate work drops ~8/3x.
-    from sports_stats_data_pipeline_spark.operators.similarity import ivf_topk
-
-    emb = load_table(spark, SF, "embeddings")
-    ivf = _rank_map(ivf_topk(emb, F.col("vec_id") < 8, k=3, n_cells=8, n_probe=3))
-    exact = _rank_map(embedding_cosine_topk(spark, SF))
-    hits = sum(
-        1
-        for key, nid in exact.items()
-        if nid in {v for kk, v in ivf.items() if kk[0] == key[0]}
-    )
-    recall = hits / len(exact)
-    assert recall >= 0.5, f"recall@3 {recall:.2f} with 3/8 probes"
-
-
 def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     path = str(tmp_path / "frag")
     orders = load_table(spark, SF, "orders")
@@ -154,249 +120,3 @@ def test_compaction_zorder_mode_row_preserving(spark, tmp_path):
             if ck:
                 spans.append(max(ck) - min(ck))
     assert spans and max(spans) <= 0.75 * full_span, spans
-
-
-def test_ivf_indexed_matches_direct(spark, tmp_path):
-    """build_ivf_index -> ivf_topk_indexed equals the direct ivf_topk
-    for the same quantizer params (deterministic Lloyd), and the
-    candidate read carries the probe-cell IN filter into the parquet
-    scan (row-group pruning on the cell-sorted layout)."""
-    import contextlib
-    import io
-
-    from sports_stats_data_pipeline_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk,
-        ivf_topk_indexed,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    path = str(tmp_path / "ivf_index")
-    build_ivf_index(emb, path, n_cells=8, kmeans_iters=2)
-
-    direct = ivf_topk(
-        emb, F.col("vec_id") < 8, k=3, n_cells=8, n_probe=3, kmeans_iters=2
-    )
-    indexed = ivf_topk_indexed(
-        spark, path, F.col("vec_id") < 8, k=3, n_probe=3
-    )
-    assert _rank_map(indexed) == _rank_map(direct)
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        indexed.explain("formatted")
-    plan = buf.getvalue()
-    # the probed-cells literal filter reaches the cells/ parquet scan...
-    assert "PushedFilters: [In(cell" in plan or "PushedFilters: [IsNotNull(cell), In(cell" in plan, plan
-    # ...and query time does no clustering work (no Lloyd lineage: the
-    # only aggregate in the plan is the window rank machinery).
-    assert "posexplode" not in plan.lower()
-
-
-def test_ivf_append_equals_one_shot_under_same_centroids(spark, tmp_path):
-    """append_to_ivf_index (frozen quantizer) must serve IDENTICAL
-    query results to a cells/ layout written in one shot over the full
-    corpus under the SAME centroid table — and the appended files must
-    keep the row-group-prunable cell-sorted layout."""
-    from sports_stats_data_pipeline_spark.functions.vectors import as_double
-    from sports_stats_data_pipeline_spark.operators.kmeans import _assign
-    from sports_stats_data_pipeline_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_topk_indexed,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    batch = emb.filter(F.col("vec_id") % 5 == 0)
-
-    inc_path = str(tmp_path / "inc")
-    build_ivf_index(base, inc_path, n_cells=8, kmeans_iters=2)
-    append_to_ivf_index(spark, inc_path, batch)
-
-    # one-shot reference under the SAME (base-trained) centroids
-    ref_path = str(tmp_path / "ref")
-    centroids = spark.read.parquet(f"{inc_path}/centroids")
-    vecs = emb.select(
-        F.col("vec_id").alias("__id"),
-        as_double(F.col("embedding")).alias("__v"),
-    )
-    (
-        vecs.join(_assign(vecs, centroids), "__id")
-        .select("cell", F.col("__id").alias("vec_id"), F.col("__v").alias("v"))
-        .repartitionByRange(8, "cell")
-        .sortWithinPartitions("cell")
-        .write.parquet(f"{ref_path}/cells")
-    )
-    centroids.write.parquet(f"{ref_path}/centroids")
-
-    q = F.col("vec_id") < 8
-    got = _rank_map(ivf_topk_indexed(spark, inc_path, q, k=3, n_probe=3))
-    want = _rank_map(ivf_topk_indexed(spark, ref_path, q, k=3, n_probe=3))
-    assert got == want and got
-
-    # appended rows landed and the batch's ids are servable neighbors
-    n_total = spark.read.parquet(f"{inc_path}/cells").count()
-    assert n_total == emb.count()
-
-
-def test_ivf_compaction_restores_pruning_layout(spark, tmp_path):
-    """After appends, compact_ivf_cells must (a) preserve rows and
-    query results exactly and (b) restore the cell-clustered layout —
-    pinned by per-file cell-span tightness, which generic round-robin
-    compaction would destroy."""
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
-    from sports_stats_data_pipeline_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-        compact_ivf_cells,
-        ivf_cell_histogram,
-        ivf_topk_indexed,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb.filter(F.col("vec_id") % 3 != 0), path, n_cells=8)
-    append_to_ivf_index(
-        spark, path, emb.filter(F.col("vec_id") % 3 == 0)
-    )
-    q = F.col("vec_id") < 8
-    before = _rank_map(ivf_topk_indexed(spark, path, q, k=3, n_probe=3))
-    hist_before = {
-        r["cell"]: r["n"] for r in ivf_cell_histogram(spark, path).collect()
-    }
-    compact_ivf_cells(spark, path, cell_partitions=4)
-    after = _rank_map(ivf_topk_indexed(spark, path, q, k=3, n_probe=3))
-    hist_after = {
-        r["cell"]: r["n"] for r in ivf_cell_histogram(spark, path).collect()
-    }
-    assert after == before and hist_after == hist_before
-    # layout: every compacted file covers a narrow, non-interleaved
-    # cell range (row-group stats prune) — with 8 cells over 4 range
-    # partitions each file spans ~2 cells
-    spans = []
-    for f in Path(f"{path}/cells").glob("*.parquet"):
-        t = pq.read_table(f, columns=["cell"])
-        if t.num_rows:
-            cells = t.column("cell").to_pylist()
-            spans.append((min(cells), max(cells)))
-    assert spans
-    for lo, hi in spans:
-        assert hi - lo <= 3, spans
-
-
-def test_ivf_index_lifecycle_drift_rebuild_recall(spark, tmp_path):
-    """The full frozen-quantizer lifecycle as ONE executed sequence
-    (round 6): build → drifted append → PSI breach on the cell
-    histogram → retrain → recall restored.
-
-    Geometry: the drifted batch is a tight cluster sitting just on one
-    side of the Voronoi boundary between the index's two farthest
-    centroids; the query points sit just on the OTHER side. Under the
-    frozen quantizer each query's nearest centroid (its n_probe=1 cell)
-    is then provably not the cluster's cell, so recall against the
-    brute-force cosine truth collapses to 0 — the canonical IVF failure
-    mode drift monitoring exists to catch. Retraining over the union
-    gives the (now dominant) cluster its own centroid(s) and restores
-    recall to 1.
-    """
-    import numpy as np
-
-    from sports_stats_data_pipeline_spark.operators.drift import psi
-    from sports_stats_data_pipeline_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_topk_indexed,
-    )
-    from sports_stats_data_pipeline_spark.sources.tables import load_table
-
-    base = (
-        load_table(spark, SF, "embeddings")
-        .filter(F.col("vec_id") < 400)
-        .select("vec_id", "embedding")
-    )
-    path, path2 = str(tmp_path / "idx"), str(tmp_path / "idx2")
-    build_ivf_index(base, path, n_cells=8, kmeans_iters=2)
-    # reference cell histogram, MATERIALIZED before the append (a lazy
-    # read here would silently observe the post-append files)
-    ref_cells = [
-        r["cell"]
-        for r in spark.read.parquet(f"{path}/cells").select("cell").collect()
-    ]
-
-    cents = {
-        r["cell"]: np.array(r["centroid"])
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-    pair = max(
-        (
-            (np.linalg.norm(cents[i] - cents[j]), (i, j))
-            for i in cents
-            for j in cents
-            if i < j
-        )
-    )[1]
-    a_c, b_c = cents[pair[0]], cents[pair[1]]
-    mid, axis = (a_c + b_c) / 2, a_c - b_c
-    axis = axis / np.linalg.norm(axis)
-
-    rows = [
-        (
-            10000 + i,
-            [
-                float(x)
-                for x in mid - 0.03 * axis + 0.002 * np.cos(np.arange(64) * (i + 1))
-            ],
-        )
-        for i in range(200)
-    ]
-    for j in range(5):
-        e = np.zeros(64)
-        e[7 * (j + 1)] = 0.2
-        rows.append((20000 + j, [float(x) for x in mid + 0.03 * axis + e]))
-    new = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    append_to_ivf_index(spark, path, new, cell_partitions=2)
-
-    # drift signal: PSI of the cell histogram crosses the repo's 0.25
-    # action threshold — the rebuild trigger
-    ref_df = spark.createDataFrame([(c,) for c in ref_cells], "cell int")
-    cur = spark.read.parquet(f"{path}/cells").select("cell")
-    breach = psi(ref_df, cur, "cell", n_bins=8, bounds=(0.0, 9.0))
-    assert breach > 0.25, breach
-
-    union = (
-        spark.read.parquet(f"{path}/cells")
-        .select("vec_id", F.col("v").alias("embedding"))
-        .localCheckpoint(eager=True)
-    )
-    rr = union.collect()
-    ids = np.array([r["vec_id"] for r in rr])
-    V = np.array([r["embedding"] for r in rr])
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    truth = {}
-    for qi, qid in enumerate(ids):
-        if qid < 20000:
-            continue
-        s = Vn @ Vn[qi]
-        order = np.lexsort((ids, -s))
-        truth[int(qid)] = set(
-            [int(ids[j]) for j in order if ids[j] != qid][:3]
-        )
-
-    def recall(index_path):
-        got = {}
-        for r in ivf_topk_indexed(
-            spark, index_path, F.col("vec_id") >= 20000, k=3, n_probe=1
-        ).collect():
-            got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return sum(
-            len(got.get(q, set()) & t) / 3 for q, t in truth.items()
-        ) / len(truth)
-
-    before = recall(path)
-    assert before <= 0.2, before  # mis-probing: queries probe the wrong cell
-    build_ivf_index(union, path2, n_cells=8, kmeans_iters=3)
-    after = recall(path2)
-    assert after >= 0.9, after  # retrain co-locates the cluster: restored

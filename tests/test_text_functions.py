@@ -1,22 +1,17 @@
-"""Unit tests for functions.text: shingles, MinHash stability, SimHash
-bitstring/int consistency, Hamming helper, lang-id heuristic."""
+"""Unit tests for functions.text: shingles, tokens, PII redaction, lang-id
+heuristic."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from sports_stats_data_pipeline_spark.functions.text import (
-    hamming_expr,
     pii_email_count,
     pii_ipv4_count,
     redact_pii,
     sql_redact_pii,
-    minhash_signature,
     predicted_lang,
     shingles,
-    simhash_bits,
-    simhash_int_from_hashes,
-    token_hashes,
     tokens,
 )
 
@@ -30,35 +25,6 @@ def test_shingles_k3_and_short_doc_fallback(spark):
     rows = df.select(shingles("text").alias("s")).collect()
     assert sorted(rows[0]["s"]) == ["a b c", "b c d"]
     assert rows[1]["s"] == ["a b"]  # shorter than k -> whole text
-
-
-def test_minhash_deterministic_and_sensitive(spark):
-    df = _df(spark, "the quick brown fox jumps over the lazy dog")
-    sig1 = df.select(*minhash_signature(shingles("text"), 4)).collect()[0]
-    sig2 = df.select(*minhash_signature(shingles("text"), 4)).collect()[0]
-    assert tuple(sig1) == tuple(sig2)
-    other = _df(spark, "completely different words entirely here now")
-    sig3 = other.select(*minhash_signature(shingles("text"), 4)).collect()[0]
-    assert tuple(sig1) != tuple(sig3)
-
-
-def test_simhash_bitstring_matches_int_form(spark):
-    df = _df(spark, "alpha beta gamma delta", "epsilon zeta eta theta")
-    out = df.select(
-        simhash_bits("text", 16).alias("bits"),
-        simhash_int_from_hashes(token_hashes("text"), 16).alias("n"),
-    ).collect()
-    for r in out:
-        assert int(r["bits"], 2) == r["n"]
-
-
-def test_hamming_expr(spark):
-    df = spark.createDataFrame(
-        [("0000", "0000"), ("0000", "1111"), ("0101", "0001")],
-        schema="a string, b string",
-    )
-    got = [r["h"] for r in df.select(hamming_expr("a", "b", 4).alias("h")).collect()]
-    assert got == [0, 4, 1]
 
 
 def test_predicted_lang_markers(spark):
